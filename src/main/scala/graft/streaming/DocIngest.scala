@@ -1,10 +1,13 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Streaming document ingest with incremental near-dup gating — the
   * LLM-corpus counterpart of [[Ingest]]: a file-drop of JSONL document
@@ -75,14 +78,18 @@ object DocIngest {
     * batch tag. Within-batch rule: for every near-dup pair (a < b), b is
     * dropped — deterministic under replay and partitioning.
     *
+    * Lineage is cut at every gate frame: the collapsed batch and each
+    * gate's output are materialized behind a [[graft.util.Checkpoints.barrier]]
+    * as they are built, so every later query plans over a handful of
+    * small leaves instead of re-deriving (and re-analysing) the batch's
+    * whole gate history. Gates that do not run yield empty local frames.
+    * The barriers' blocks and the Bloom probe's broadcast are freed when
+    * the batch ends, failed or not.
+    *
     * `phaseWalls` (operational telemetry, None in production): when set,
-    * each gate/fold/maintenance phase is FORCED at its boundary (a
-    * count() on the already-cached frame — no recompute, just earlier
-    * materialization) and its wall seconds accumulate into the map under
-    * a stable phase key. This is how the soak attributes per-batch wall
-    * growth to a phase by measurement instead of inference (r12 verdict
-    * ask #2). With None, nothing extra is forced and the plan boundaries
-    * are exactly the production ones. */
+    * each phase's wall seconds accumulate into the map under a stable
+    * phase key. Every barrier runs inside its phase, so the phase walls
+    * time the same jobs and plans that run untraced. */
   def commitDocBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       corpusDir: String, indexPath: String, threshold: Double = 0.35,
       n: Int = 3, numHashes: Int = 64, bands: Int = 16,
@@ -98,29 +105,16 @@ object DocIngest {
       evalPath: Option[String] = None, decontamN: Int = 5,
       phaseWalls: Option[scala.collection.mutable.Map[String, Double]] = None)
       : BatchResult = {
-    // duplicate doc_id rows collapse deterministically (whole-row min over
-    // the non-key columns) BEFORE any gate — the EmbIngest producer-retry
-    // rule extended to the text daemon: the within-batch LSH gate pairs
-    // only a_id < b_id, so a duplicated line's copies never gated each
-    // other and BOTH rows flowed into the corpus and the BM25/LSH folds
-    // (double-counted tf; masked by served==rebuild checks because both
-    // sides read the same duplicated corpus — surfaced by the r13
-    // MediaSoak equivalent of this bug)
-    val nonKey = batch.columns.filterNot(_ == "doc_id")
-    val b = batch.groupBy(col("doc_id"))
-      .agg(min(struct(nonKey.map(col): _*)).as("_row"))
-      .select(col("doc_id") +: nonKey.map(c => col(s"_row.`$c`").as(c)): _*)
-      .persist()
-    val cached = scala.collection.mutable.ArrayBuffer[DataFrame](b)
-    // storageLevel guard: two gates can hand back plan-identical frames
-    // (the limit(0) placeholders when index/eval gates are off), and a
-    // second persist() of an already-cached plan noisy-warns the daemon's
-    // logs every batch
-    def cache(df: DataFrame): DataFrame = {
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        cached += df.persist()
-      df
+    val barriers = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    var bloom: Option[Broadcast[BloomFilter]] = None
+    def cut(df: DataFrame): DataFrame = {
+      val m = graft.util.Checkpoints.barrier(df)
+      barriers += m
+      m
     }
+    // a gate that does not run: no rows, no lineage, no job
+    def none(like: DataFrame): DataFrame =
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), like.schema)
     def phase[T](name: String)(f: => T): T = phaseWalls match {
       case Some(m) =>
         val t0 = System.nanoTime()
@@ -129,10 +123,6 @@ object DocIngest {
         r
       case None => f
     }
-    // materialize a cached gate frame at its phase boundary (telemetry
-    // only — the frame is persisted, so later uses hit the cache)
-    def settle(df: DataFrame): Unit =
-      if (phaseWalls.isDefined) { df.count(); () }
     try {
       // id-sidecar entry: recovery + THIS batch's own-marker sweep. The
       // LSH tree has no committed-batch meta (replays always recompute,
@@ -160,12 +150,25 @@ object DocIngest {
           // gate probes the tree.
           Dedup.consolidateLshSegments(spark, indexPath, batchId - 1)
         }
-      val withinPairs = cache(Dedup
-        .minhashLshPairs(b, n, numHashes, bands, threshold, gramHashes, bandBucket)
-        .select(col("a_id"), col("b_id")))
-      val withinDrops = cache(
-        withinPairs.select(col("b_id").as("doc_id")).distinct())
-      phase("gate_text")(settle(withinDrops))
+      // duplicate doc_id rows collapse deterministically (whole-row min over
+      // the non-key columns) BEFORE any gate — the EmbIngest producer-retry
+      // rule extended to the text daemon: the within-batch LSH gate pairs
+      // only a_id < b_id, so a duplicated line's copies never gated each
+      // other and BOTH rows flowed into the corpus and the BM25/LSH folds
+      // (double-counted tf; masked by served==rebuild checks because both
+      // sides read the same duplicated corpus — surfaced by the r13
+      // MediaSoak equivalent of this bug)
+      val nonKey = batch.columns.filterNot(_ == "doc_id")
+      val b = phase("collapse")(cut(batch.groupBy(col("doc_id"))
+        .agg(min(struct(nonKey.map(col): _*)).as("_row"))
+        .select(col("doc_id") +: nonKey.map(c => col(s"_row.`$c`").as(c)): _*)))
+      val noIds = none(b.select("doc_id"))
+      val (withinPairs, withinDrops) = phase("gate_text") {
+        val p = cut(Dedup
+          .minhashLshPairs(b, n, numHashes, bands, threshold, gramHashes, bandBucket)
+          .select(col("a_id"), col("b_id")))
+        (p, cut(p.select(col("b_id").as("doc_id")).distinct()))
+      }
       // existence through the path's own filesystem — a java.io.File check
       // would silently disable the gate on hdfs:// / s3:// deployments —
       // and by DATA files, not the bare dir: a crashed batch-0 append
@@ -196,29 +199,31 @@ object DocIngest {
       // so no own-batch-dir exclusion is needed on this path). Legacy
       // trees keep the sizes/ scan with its file-path exclusion.
       val redelivered = phase("gate_redelivery") {
-        val df = cache(if (!indexExists) withinDrops.limit(0)
-          else graft.util.BloomSidecar.read(spark, indexPath) match {
-            case Some(bits) =>
-              val positives = b
-                .filter(graft.util.BloomSidecar.probe(bits, col("doc_id")))
-                .select("doc_id").distinct()
-              if (positives.isEmpty) withinDrops.limit(0)
-              else if (graft.util.IdTree.exists(spark, indexPath))
-                graft.util.IdTree.verify(spark, indexPath, positives, "doc_id")
-              else positives.join(storedDocIds, Seq("doc_id"), "left_semi")
-            case None => b.join(storedDocIds, Seq("doc_id"), "left_semi")
+        if (!indexExists) noIds
+        else graft.util.BloomSidecar.read(spark, indexPath) match {
+          case Some(bits) =>
+            val filter = graft.util.BloomSidecar.broadcast(spark, bits)
+            bloom = Some(filter)
+            val positives = b
+              .filter(graft.util.BloomSidecar.probe(filter, col("doc_id")))
               .select("doc_id").distinct()
-          })
-        settle(df); df
+            if (positives.isEmpty) noIds
+            else if (graft.util.IdTree.exists(spark, indexPath))
+              cut(graft.util.IdTree.verify(spark, indexPath, positives, "doc_id"))
+            else cut(positives.join(storedDocIds, Seq("doc_id"), "left_semi"))
+          case None => cut(b.join(storedDocIds, Seq("doc_id"), "left_semi")
+            .select("doc_id").distinct())
+        }
       }
-      val indexPairs = cache(if (indexExists)
-        Dedup.minhashLshAgainstIndex(spark, indexPath, b, threshold, n,
-            numHashes, bands, gramHashes, bandBucket)
-          .select(col("a_id"), col("b_id"))
-      else withinPairs.limit(0))
-      val indexDrops = cache(indexPairs.select(col("a_id").as("doc_id"))
-        .distinct())
-      phase("gate_text")(settle(indexDrops))
+      val (indexPairs, indexDrops) = phase("gate_text") {
+        if (!indexExists) (none(withinPairs), noIds)
+        else {
+          val p = cut(Dedup.minhashLshAgainstIndex(spark, indexPath, b,
+              threshold, n, numHashes, bands, gramHashes, bandBucket)
+            .select(col("a_id"), col("b_id")))
+          (p, cut(p.select(col("a_id").as("doc_id")).distinct()))
+        }
+      }
       // Vector gate (embIndexPath set and the drop carries embeddings):
       // the [[EmbIngest]] gate run on the same batch under the same batch
       // id — cell-local cosine near-dups within the batch and against the
@@ -231,10 +236,10 @@ object DocIngest {
       // duplicate doc_id rows collapse deterministically BEFORE any vector
       // work (the embGateVerdicts rule): a producer-retried duplicate line
       // would otherwise fold the same vec_id twice into the tree
-      val embFrame = embIndexPath.flatMap { p =>
+      val embFrame = phase("gate_vector")(embIndexPath.flatMap { p =>
         if (!b.columns.contains("embedding")) None
         else {
-          val vecs = cache(b.filter(col("embedding").isNotNull)
+          val vecs = cut(b.filter(col("embedding").isNotNull)
             .select(col("doc_id").as("vec_id"), col("embedding"))
             .groupBy("vec_id").agg(min(col("embedding")).as("embedding")))
           // an all-null-embedding batch must not train (and swap-commit) an
@@ -242,7 +247,7 @@ object DocIngest {
           // rules still apply and a later non-empty batch trains normally
           if (vecs.count() == 0L) None else Some((p, vecs))
         }
-      }
+      })
       val (embWithinPairs, embIndexPairs) = phase("gate_vector")(embFrame match {
         case Some((p, vecs)) =>
           val fs = graft.util.Lsm.fs(spark, p)
@@ -266,28 +271,31 @@ object DocIngest {
             graft.util.Lsm.commitSwap(fs, p, "centroids", batchId)
           }
           val cents = spark.read.parquet(s"$vroot/centroids")
-          val probes = cache(
+          val probes = cut(
             graft.operators.Similarity.ivfProbes(vecs, cents, embNprobe))
-          val w = cache(graft.operators.Similarity
+          val w = cut(graft.operators.Similarity
             .embNearDupWithin(probes, embThreshold)
             .select(col("a_id"), col("b_id")))
           // DATA-file probe, not dir existence (the crashed-first-fold
           // sweep leaves empty cid= dirs that would wedge a bare read)
-          val i = cache(
+          val i =
             if (graft.util.Lsm.hasBucketData(fs,
                 new org.apache.hadoop.fs.Path(s"$vroot/vectors")))
-              graft.operators.Similarity
+              cut(graft.operators.Similarity
                 .embNearDupAgainstIndex(spark, p, probes, embThreshold)
-                .select(col("a_id"), col("b_id"))
-            else w.limit(0))
-          settle(w); settle(i)
+                .select(col("a_id"), col("b_id")))
+            else none(w)
           (w, i)
-        case None => (withinPairs.limit(0), withinPairs.limit(0))
+        case None => (none(withinPairs), none(withinPairs))
       })
-      val withinAllDrops = cache(withinDrops
-        .union(embWithinPairs.select(col("b_id").as("doc_id"))).distinct())
-      val indexAllDrops = cache(indexDrops
-        .union(embIndexPairs.select(col("a_id").as("doc_id"))).distinct())
+      // without a vector gate the text drops are the whole answer
+      val (withinAllDrops, indexAllDrops) =
+        if (embFrame.isEmpty) (withinDrops, indexDrops)
+        else phase("gate_vector")((
+          cut(withinDrops.union(embWithinPairs.select(col("b_id").as("doc_id")))
+            .distinct()),
+          cut(indexDrops.union(embIndexPairs.select(col("a_id").as("doc_id")))
+            .distinct())))
       // Eval-set decontamination gate (evalPath): a batch doc sharing any
       // distinct decontamN-gram with the (tiny, broadcast) at-rest eval set
       // never enters the corpus OR any index — the q54 operator run per
@@ -295,35 +303,31 @@ object DocIngest {
       // instead of requiring a corpus-scale backfill sweep. Deterministic
       // function of the batch and the static eval parquet, so replays
       // reconverge like every other gate.
-      val contamDrops = phase("gate_contam") {
-        val df = cache(evalPath match {
-          case Some(ep) => Dedup.contaminatedBy(b,
-              spark.read.parquet(ep), decontamN).select("doc_id").distinct()
-          case None => withinDrops.limit(0)
-        })
-        settle(df); df
-      }
-      val admitted = cache(b
-        .join(withinAllDrops.union(indexAllDrops).union(redelivered)
+      val contamDrops = phase("gate_contam")(evalPath match {
+        case Some(ep) => cut(Dedup.contaminatedBy(b,
+            spark.read.parquet(ep), decontamN).select("doc_id").distinct())
+        case None => noIds
+      })
+      val (admitted, nAdmitted) = phase("admit") {
+        val a = cut(b.join(withinAllDrops.union(indexAllDrops).union(redelivered)
             .union(contamDrops).distinct(),
           Seq("doc_id"), "left_anti"))
-      val nAdmitted = phase("admit")(admitted.count()) // materialize before the writes reuse it
+        (a, a.count())
+      }
       phase("corpus_write")(
         admitted.write.mode("overwrite").parquet(s"$corpusDir/batch-$batchId"))
       // sidecar folds BEFORE the index append (the BloomSidecar ordering
       // contract: a crash after this leaves a harmless superset)
       phase("sidecar_fold")(graft.util.BloomSidecar.fold(spark, indexPath,
         admitted.select("doc_id"), "doc_id", batchId,
-        storedIds = if (indexExists) storedDocIds
-          else admitted.select("doc_id").limit(0)))
+        storedIds = if (indexExists) storedDocIds else noIds))
       // id sidecar folds under the same pre-commit rule (here the commit
       // point is the stream checkpoint; the entry sweep restores
       // exactness on replay) — a legacy tree adopts it from the sizes/
       // scan, the one-time bootstrap pass
       phase("sidecar_fold")(graft.util.IdTree.fold(spark, indexPath,
         admitted.select("doc_id"), "doc_id", batchId,
-        storedIds = if (indexExists) storedDocIds
-          else admitted.select("doc_id").limit(0)))
+        storedIds = if (indexExists) storedDocIds else noIds))
       phase("fold_lsh")(Dedup.appendToLshIndex(admitted, indexPath,
         s"batch-$batchId", n, numHashes, bands, gramHashes, bandBucket))
       // saturation repair for the LSH tree's sidecar at compaction cadence
@@ -418,9 +422,13 @@ object DocIngest {
         s"dropped_redelivered=${r.droppedRedelivered} " +
         s"dropped_contaminated=${r.droppedContaminated}")
       r
-    } finally cached.foreach(_.unpersist()) // also on a mid-batch failure:
-    // the streaming engine retries the batch, and leaked caches would
-    // accumulate in the block manager for the daemon's lifetime
+    } finally {
+      // also on a mid-batch failure: the streaming engine retries the
+      // batch, and leaked blocks would accumulate in the block manager
+      // for the daemon's lifetime
+      barriers.foreach(DatasetBridge.releaseBarrier)
+      bloom.foreach(_.destroy())
+    }
   }
 
   /** Read the admitted corpus back (all batch directories). */

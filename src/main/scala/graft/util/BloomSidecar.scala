@@ -1,10 +1,8 @@
 package graft.util
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.BinaryType
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Per-tree Bloom sidecar over the ids an at-rest index has admitted —
@@ -33,17 +31,21 @@ import org.apache.spark.util.sketch.BloomFilter
   * require it); [[rebuild]] re-creates from the tree's full id scan with
   * ≥2× headroom — run it at compaction cadence once inserted volume
   * approaches capacity, since a saturated filter degrades to fpp→1
-  * (every batch scans — correct, just slow). The serialized filter rides
-  * the plan as a binary literal, so size it like Spark's own runtime
-  * bloom filters (spark.sql.optimizer.runtime.bloomFilter.* caps at 8 MB
-  * ≈ 5.6M ids at 1% fpp); past that, shard trees or raise fpp — the
-  * probe stays correct at any fpp, only the scan-skip rate decays.
+  * (every batch scans — correct, just slow). The filter reaches the
+  * executors as a broadcast (see [[probe]]), so its size costs driver and
+  * executor memory once per batch and never enters a query plan; at 1%
+  * fpp it is ~1.2 bytes per id (600 KB for the 500k default, ~6 MB for
+  * 5M ids). Past what a broadcast should carry, shard trees or raise fpp —
+  * the probe stays correct at any fpp, only the scan-skip rate decays.
   *
   * Probe plumbing: ids go in raw via putLong (the distributed
   * `stat.bloomFilter` aggregate on the long id column) and are tested
-  * with Spark's own [[BloomFilterMightContain]] catalyst expression —
-  * `mightContainLong(id)` against `putLong(id)`, no UDF, the same
-  * expression AQE's runtime-filter rewrite injects into scans.
+  * with `mightContainLong(id)` — the same hashing Spark's own
+  * `BloomFilterMightContain` runtime filter uses — in a UDF that reads the
+  * deserialized filter from the broadcast. That expression would instead
+  * carry the serialized filter as a binary literal in every plan built
+  * over the probed frame, and the driver hashes, compares and prints that
+  * literal on every analysis and explain.
   */
 object BloomSidecar {
 
@@ -60,13 +62,26 @@ object BloomSidecar {
       .collect()(0).getAs[Array[Byte]](0))
   }
 
+  /** The stored filter, deserialized once and shipped once per executor.
+    * The caller owns it: `destroy()` it when the frames that probe it are
+    * done (a daemon batch does so in its `finally`); one left alone is
+    * reclaimed by the ContextCleaner once no plan references it. */
+  def broadcast(spark: SparkSession, filterBytes: Array[Byte]): Broadcast[BloomFilter] =
+    spark.sparkContext.broadcast(
+      BloomFilter.readFrom(new java.io.ByteArrayInputStream(filterBytes)))
+
   /** `true` iff `key` (a long id column) is PROBABLY in the filter — no
     * false negatives by Bloom construction + the fold-first commit order.
-    * Pure catalyst expression; apply it to the batch side only. */
+    * Null keys probe to null (a filter drops them). Apply it to the batch
+    * side only. */
+  def probe(filter: Broadcast[BloomFilter], key: Column): Column =
+    udf((id: Long) => filter.value.mightContainLong(id))
+      .withName("bloom_might_contain")(key.cast("long"))
+
+  /** [[probe]] over a broadcast of `filterBytes` that the ContextCleaner
+    * reclaims (see [[broadcast]]). */
   def probe(filterBytes: Array[Byte], key: Column): Column =
-    ColumnBridge.column(BloomFilterMightContain(
-      Literal(filterBytes, BinaryType),
-      ColumnBridge.catalystExpression(key.cast("long"))))
+    probe(broadcast(SparkSession.active, filterBytes), key)
 
   private def build(ids: DataFrame, idCol: String, expectedItems: Long,
       fpp: Double): BloomFilter = {

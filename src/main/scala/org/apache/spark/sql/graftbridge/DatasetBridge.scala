@@ -45,11 +45,14 @@ object DatasetBridge {
     * checkpoint the call is a harmless no-op (files are reclaimed on GC
     * under cleanCheckpoints, storage blocks were never used). Safe only on
     * frames no longer referenced — the blocks are gone, and a localCheckpoint
-    * cannot recompute. */
+    * cannot recompute. Frees through the context, as the ContextCleaner
+    * does, rather than `RDD.unpersist`, which logs a WARN per locally
+    * checkpointed RDD — a daemon releasing its barriers every batch would
+    * fill its log with them. */
   def releaseBarrier(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false); ()
+        l.rdd.sparkContext.unpersistRDD(l.rdd.id, blocking = false)
       case _ => ()
     }
 

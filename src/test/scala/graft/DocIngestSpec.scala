@@ -162,7 +162,7 @@ class DocIngestSpec extends SparkSpec {
     val b0 = docsDf(0L -> tA, 3L -> tB, 5L -> tC)
     DocIngest.commitDocBatch(spark, b0, 0L, corpus, index)
     // instrumented batch vs the same batch uninstrumented on a twin tree:
-    // identical BatchResult (the telemetry only forces cached frames)
+    // identical BatchResult (the telemetry only reads the clock)
     val corpus2 = Files.createTempDirectory("doc-ph-corpus2").toString
     val index2 = Files.createTempDirectory("doc-ph-index2").toString
     DocIngest.commitDocBatch(spark, b0, 0L, corpus2, index2)
@@ -179,6 +179,65 @@ class DocIngestSpec extends SparkSpec {
     assert(expected.subsetOf(phases.keySet),
       s"every live phase must be timed, got ${phases.keySet}")
     assert(phases.values.forall(_ >= 0.0))
+  }
+
+  test("a batch frees every block it materialized, also when it fails midway") {
+    val corpus = Files.createTempDirectory("doc-free-corpus").toString
+    val index = Files.createTempDirectory("doc-free-index").toString
+    val inv = Files.createTempDirectory("doc-free-inv").toString + "/bm25"
+    val evalDir = Files.createTempDirectory("doc-free-eval").toString + "/eval"
+    Seq((900L, tE)).toDF("doc_id", "text").write.parquet(evalDir)
+    DocIngest.commitDocBatch(spark, docsDf(0L -> tA, 3L -> tB), 0L,
+      corpus, index, invIndexPath = Some(inv))
+    // ids only ever leave the set between snapshots when the context
+    // cleaner reclaims an earlier test's RDD, so a leak shows as an id
+    // present after the batch that was absent before it
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    // every gate live: bloom-positive re-delivery, vs-index near-dup,
+    // within-batch near-dup, contamination
+    val r1 = DocIngest.commitDocBatch(spark,
+      docsDf(0L -> tC, 2L -> tB, 6L -> tD, 7L -> tD, 8L -> tE), 1L,
+      corpus, index, invIndexPath = Some(inv), evalPath = Some(evalDir))
+    assert(r1 == DocIngest.BatchResult(1, 1, 1, 1, 1), s"r1=$r1")
+    assert((persisted -- before).isEmpty, s"leaked ${persisted -- before}")
+    // fails after the gates, the admit and the corpus write: the stats
+    // row is gone over live postings
+    val fs = new org.apache.hadoop.fs.Path(inv)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$inv/stats"), true)
+    intercept[IllegalArgumentException] {
+      DocIngest.commitDocBatch(spark, docsDf(3L -> tD, 9L -> tC), 2L,
+        corpus, index, invIndexPath = Some(inv), evalPath = Some(evalDir))
+    }
+    assert(corpusIds(corpus).contains(9L), "the failure must come after the gates")
+    assert((persisted -- before).isEmpty, s"leaked ${persisted -- before}")
+  }
+
+  test("plan size: no plan carries the Bloom filter, the corpus write reads the batch once") {
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.graftbridge.PlanProbe
+    val corpus = Files.createTempDirectory("doc-plan-corpus").toString
+    val index = Files.createTempDirectory("doc-plan-index").toString
+    DocIngest.commitDocBatch(spark, docsDf(0L -> tA, 3L -> tB, 5L -> tC), 0L,
+      corpus, index)
+    assert(graft.util.BloomSidecar.read(spark, index).exists(_.length > 1024),
+      "the fixture's filter must be larger than the literal bound")
+    // 3 re-delivered (bloom-positive, verified), 6 near-dups 0, 7 novel
+    val (r1, named) = PlanProbe.capture(spark)(DocIngest.commitDocBatch(spark,
+      docsDf(3L -> tD, 6L -> tA, 7L -> tE), 1L, corpus, index))
+    val qes = named.map(_._2)
+    assert(r1 == DocIngest.BatchResult(1, 0, 1, 1), s"r1=$r1")
+    assert(qes.nonEmpty)
+    val bulky = qes.map(PlanProbe.maxBinaryLiteral).filter(_ > 1024)
+    assert(bulky.isEmpty, s"binary literals of ${bulky.mkString(", ")} bytes in plans")
+    val corpusWrites = qes.filter(_.optimizedPlan.exists {
+      case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString.contains(corpus)
+      case _ => false
+    })
+    assert(corpusWrites.size == 1)
+    val scans = PlanProbe.leafScans(corpusWrites.head)
+    assert(scans == 1, s"the corpus write reads $scans leaves")
   }
 
   test("commitDocBatch decontamination gate: eval-overlapping docs never enter corpus or index") {
