@@ -118,9 +118,19 @@ object Bench {
         nq < 20 || stampsOf(line) <= 0.05 * nq
       }
 
+  /** Was this history row timed on the same board: the same SF and the
+    * same core count? A row without `cpus` (written before rows carried
+    * it) matches no board, so it can never be a baseline or refute a
+    * flag: an 8-core row judged against 32-core numbers reads the core
+    * scaling ratio as regressions, and hides real ones the other way. */
+  private[graft] def sameBoard(line: String, sfDir: String, cpus: Int): Boolean =
+    line.contains("\"sf\":\"" + sfDir + "\"") &&
+      "\"cpus\":(\\d+)".r.findFirstMatchIn(line).exists(_.group(1).toInt == cpus)
+
   /** Round-over-round regression detection over BENCH_HISTORY.jsonl lines.
     *
-    * Baseline = the LAST full-board history entry at the same SF, overlaid
+    * Baseline = the LAST full-board history entry at the same SF and core
+    * count ([[sameBoard]]), overlaid
     * with any LATER `"quiet":true` rows (QuietProbe appends them): a quiet
     * idle-host minimum replaces a contaminated bench min and lowers a loaded
     * one, so the gate compares against the engine's honest cost rather than
@@ -199,7 +209,7 @@ object Bench {
     * into prevContam so an upper-bound baseline can't mask a real
     * regression — quiet rows overlay them with honest minimums. */
   private[graft] def findRegressions(histLines: Seq[String], sfDir: String,
-      current: Seq[(String, Double)],
+      cpus: Int, current: Seq[(String, Double)],
       contaminatedNow: Set[String],
       sameRoundMins: Map[String, Double] = Map.empty,
       sameRoundLabelMins: Map[String, Double] = Map.empty,
@@ -207,14 +217,14 @@ object Bench {
       untrustedNow: Set[String] = Set.empty)
       : (Double, Boolean, Seq[(String, Double, Double)],
          Seq[(String, Double, Double)]) = {
-    val sameSf = histLines.filter(_.contains("\"sf\":\"" + sfDir + "\""))
-    val baseIdx = sameSf.lastIndexWhere(l =>
+    val boardRows = histLines.filter(sameBoard(_, sfDir, cpus))
+    val baseIdx = boardRows.lastIndexWhere(l =>
       !l.contains("\"quiet\":true") && trustworthyBaseline(l))
     if (baseIdx < 0) return (1.0, false, Seq.empty, Seq.empty)
-    val prev = sameSf(baseIdx)
+    val prev = boardRows(baseIdx)
     var prevMins = queriesOf(prev)
     var prevContam = namesOf(prev, "contaminated") ++ namesOf(prev, "untrusted")
-    for (q <- sameSf.drop(baseIdx + 1) if q.contains("\"quiet\":true");
+    for (q <- boardRows.drop(baseIdx + 1) if q.contains("\"quiet\":true");
          (k, v) <- queriesOf(q)) {
       prevMins += k -> (if (prevContam(k)) v
                         else math.min(prevMins.getOrElse(k, v), v))
@@ -359,10 +369,10 @@ object Bench {
     * without a commit stamp (pre-r13 history) never refute: a window that
     * can't prove it ran the current code can't clear a flag against it. */
   private[graft] def sameRoundMinsOf(histLines: Seq[String],
-      roundLabel: String, sfDir: String, commit: String)
+      roundLabel: String, sfDir: String, cpus: Int, commit: String)
       : Map[String, Double] = histLines
     .filter(l => l.contains("\"round\":\"" + roundLabel + "\"") &&
-      l.contains("\"sf\":\"" + sfDir + "\"") &&
+      sameBoard(l, sfDir, cpus) &&
       l.contains("\"commit\":\"" + commit + "\"") &&
       !l.contains("\"quiet\":true"))
     .map(queriesOf)
@@ -393,25 +403,8 @@ object Bench {
     val budgetFrac =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_FRAC", "0.7").toDouble
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // production posture: native functions + optimizer rules + the TopK
-      // planner strategy ride the session from birth (rules stay inert
-      // without their opt-in confs / custom nodes)
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Pin ANSI explicitly (Spark 4 default = true) so bench behavior never
-      // shifts with a deployment-level default.
-      .config("spark.sql.ansi.enabled", "true")
-      // files-based checkpoints (connected components) are reclaimed when
-      // their RDD is GC'd, instead of accumulating for the session lifetime
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession(s"local[$cpus]", cpus)
     /** Force full execution of df: hash every output column per row, then
       * bit_xor all row hashes into one Long. Overflow-free by construction. */
     def force(df: org.apache.spark.sql.DataFrame): Unit = {
@@ -662,10 +655,10 @@ object Bench {
     // must not have its regression refuted by a window that predates it.
     // Label-only mins (any commit) can only DOWNGRADE a flag to
     // needs-re-time — contradicted-but-unproven.
-    val sameRoundMins = sameRoundMinsOf(histLines, roundLabel, sfDir, commit)
+    val sameRoundMins = sameRoundMinsOf(histLines, roundLabel, sfDir, cpus, commit)
     val roundLabelMins: Map[String, Double] = histLines
       .filter(l => l.contains("\"round\":\"" + roundLabel + "\"") &&
-        l.contains("\"sf\":\"" + sfDir + "\"") && !l.contains("\"quiet\":true"))
+        sameBoard(l, sfDir, cpus) && !l.contains("\"quiet\":true"))
       .map(queriesOf)
       .foldLeft(Map.empty[String, Double]) { (acc, qs) =>
         qs.foldLeft(acc) { case (a, (k, v)) =>
@@ -692,7 +685,7 @@ object Bench {
       if (histLines.isEmpty || only.nonEmpty)
         (1.0, false, Seq.empty[(String, Double, Double)],
           Seq.empty[(String, Double, Double)])
-      else findRegressions(histLines, sfDir, ok, contaminated.toSet,
+      else findRegressions(histLines, sfDir, cpus, ok, contaminated.toSet,
         sameRoundMins, roundLabelMins, windowSteal, untrusted)
     if (windowContaminated)
       System.err.println(f"[bench] WINDOW CONTAMINATED (median inflation " +
@@ -750,7 +743,7 @@ object Bench {
       (if (downshifted) ", BUDGET-DOWNSHIFTED (single-run tail of board)"
        else "")
     val detail =
-      s"""{"metric":"detail","round_summary":"$roundSummary","queries":$qs,"runs":$runsJson,"bench_only":$extraJson,"failed":${arr(failed)},"flaky":${arr(flaky)},"contaminated":${arr(contaminated)},"untrusted":${arr(untrusted.toSeq.sorted)},"window_inflation":${f3(windowInflation)},"window_contaminated":$windowContaminated,"window_steal_pct":${f3(windowSteal)},"regressions":$regJson,"needs_retime":$retimeJson,"round_best_total":${f3(roundBestTotal)},"round_best_queries":$roundBestJson,"commit":"$commit","sf":"$sfDir"}"""
+      s"""{"metric":"detail","round_summary":"$roundSummary","queries":$qs,"runs":$runsJson,"bench_only":$extraJson,"failed":${arr(failed)},"flaky":${arr(flaky)},"contaminated":${arr(contaminated)},"untrusted":${arr(untrusted.toSeq.sorted)},"window_inflation":${f3(windowInflation)},"window_contaminated":$windowContaminated,"window_steal_pct":${f3(windowSteal)},"regressions":$regJson,"needs_retime":$retimeJson,"round_best_total":${f3(roundBestTotal)},"round_best_queries":$roundBestJson,"commit":"$commit","sf":"$sfDir","cpus":$cpus}"""
     val line =
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries_n":${ok.size},"failed_n":${failed.size},"flaky_n":${flaky.size},"regressions_n":${regressions.size},"needs_retime_n":${needsRetime.size},"window_inflation":${f3(windowInflation)},"window_contaminated":$windowContaminated,"round_best_total":${f3(roundBestTotal)},"detail":"${outPath.stripSuffix(".json") + "_detail.json"}","sf":"$sfDir"}"""
     println(detail)
@@ -780,7 +773,7 @@ object Bench {
       // as a future regression baseline (see trustworthyBaseline).
       val truncated = spark.sparkContext.isStopped
       val hist =
-        s"""{"round":"$roundLabel","sf":"$sfDir","commit":"$commit","window_steal_pct":${
+        s"""{"round":"$roundLabel","sf":"$sfDir","cpus":$cpus,"commit":"$commit","window_steal_pct":${
           f3(windowSteal)},"window_contaminated":$windowContaminated${
           if (truncated) ",\"truncated\":true" else ""},"contaminated":${
           arr(contaminated)},"untrusted":${arr(untrusted.toSeq.sorted)},"queries":$qs,"bench_only":$extraJson}"""

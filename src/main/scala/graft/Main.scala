@@ -24,20 +24,10 @@ import org.apache.spark.sql.functions._
   */
 object Main {
 
+  /** [[GraftSession]] on `SPARK_GRAFT_MASTER` (default `local[SPARK_GRAFT_CPUS]`). */
   def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "true") // pin, don't inherit
-      // files-based checkpoints (connected components) are reclaimed when
-      // their RDD is GC'd, instead of accumulating for the session lifetime
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    GraftSession(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"), cpus)
   }
 
   def main(args: Array[String]): Unit = args.toList match {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -23,22 +22,8 @@ object Verify {
     System.setProperty("graft.graypx.path", SparkEntry.grayPixelsPath(sfDir))
     System.setProperty("graft.graypx2.path",
       SparkEntry.grayPixelsPath(sfDir) + "_pairs")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // production posture: native functions + optimizer rules + the TopK
-      // planner strategy ride the session from birth (rules stay inert
-      // without their opt-in confs / custom nodes)
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true") // pin, don't inherit
-      // files-based checkpoints (connected components) are reclaimed when
-      // their RDD is GC'd, instead of accumulating for the session lifetime
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession(s"local[$cpus]", cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

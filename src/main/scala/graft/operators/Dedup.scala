@@ -5,6 +5,7 @@ import graft.util.Checkpoints.BarrierOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for a large-scale corpus:
   *
@@ -86,7 +87,7 @@ object Dedup {
     // them, so an unbarriered pool re-runs the corpus explode per consumer
     // (the q101 fan-out lesson); disk-backed: corpus-scale
     graft.util.Checkpoints.ensureDir(docs.sparkSession)
-    val g = gramRows(docs, n).barrierDisk()
+    val g = gramRows(docs, n).barrier(StorageLevel.DISK_ONLY)
     val sizes = g.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
     // gramRows is distinct-per-doc, so count(*) per gram == doc frequency
     val keep = g.groupBy("gram").agg(count(lit(1)).as("gdf"))
@@ -141,7 +142,7 @@ object Dedup {
     // same three-consumer gram-pool fan-out as [[ngramJaccardPairs]];
     // disk-backed: corpus-scale
     graft.util.Checkpoints.ensureDir(docs.sparkSession)
-    val g = gramRows(docs, n).barrierDisk()
+    val g = gramRows(docs, n).barrier(StorageLevel.DISK_ONLY)
     val sizes = g.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
     val keep = g.groupBy("gram").agg(count(lit(1)).as("gdf"))
       .filter(col("gdf") > 1 && col("gdf") <= maxGramDocs)
@@ -180,7 +181,7 @@ object Dedup {
     // same three-consumer gram-pool fan-out as [[ngramJaccardPairs]];
     // disk-backed: corpus-scale
     graft.util.Checkpoints.ensureDir(docs.sparkSession)
-    val g = gramRows(docs, n).barrierDisk()
+    val g = gramRows(docs, n).barrier(StorageLevel.DISK_ONLY)
     val sizes = g.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
     val keep = g.groupBy("gram").agg(count(lit(1)).as("gdf"))
       .filter(col("gdf") > 1 && col("gdf") <= maxGramDocs)
@@ -239,7 +240,7 @@ object Dedup {
     graft.util.Checkpoints.ensureDir(docs.sparkSession)
     val gs = docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"), gramsOfToks(col("toks"), n).as("grams"))
-      .barrierDisk()
+      .barrier(StorageLevel.DISK_ONLY)
     val g = gs.select(col("doc_id"), explode(col("grams")).as("gram"))
     val sizes = g.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
     val gdf = g.groupBy("gram").agg(count(lit(1)).as("gdf"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.util.Checkpoints.BarrierOps
+import org.apache.spark.storage.StorageLevel
 
 /** Graph centrality over an edge list — the quality-propagation primitive a
   * training-data pipeline uses to rank entities (hosts by link graph,
@@ -830,7 +831,7 @@ object Graph {
     val und = edges.select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-      .barrierDisk()
+      .barrier(StorageLevel.DISK_ONLY)
     val deg = und.select(col("u").as("node"))
       .union(und.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))

@@ -3,6 +3,7 @@ package graft.operators
 import graft.util.Checkpoints.BarrierOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Statistical language-model quality scoring: train an add-one-smoothed
   * bigram model ON the corpus, then score every document by its average
@@ -45,7 +46,7 @@ object LangModel {
     // each once (the q101 gram-pool lesson: fully-lazy composition re-runs
     // the corpus explode per consumer)
     graft.util.Checkpoints.ensureDir(docs.sparkSession)
-    val bg = bigramRows(docs, textCol).barrierDisk()
+    val bg = bigramRows(docs, textCol).barrier(StorageLevel.DISK_ONLY)
     val cBigram = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     val cUnigram = docs.select(explode(split(col(textCol), " ")).as("w1"))
       .groupBy("w1").agg(count(lit(1)).as("c1"))
@@ -87,7 +88,7 @@ object LangModel {
     // four consumers of the bigram pool (three marginal aggregates + the
     // position count) — one materialization, not four corpus explodes
     graft.util.Checkpoints.ensureDir(docs.sparkSession)
-    val bg = bigramRows(docs, textCol).barrierDisk()
+    val bg = bigramRows(docs, textCol).barrier(StorageLevel.DISK_ONLY)
     val cBigram = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     val cLeft = bg.groupBy("w1").agg(count(lit(1)).as("cl"))
     val cRight = bg.groupBy("w2").agg(count(lit(1)).as("cr"))
@@ -131,7 +132,7 @@ object LangModel {
     // corpus explode runs 3x and the bigram-count aggregate 4x — the q101
     // gram-pool fan-out
     graft.util.Checkpoints.ensureDir(docs.sparkSession)
-    val bg = bigramRows(docs, textCol).barrierDisk()
+    val bg = bigramRows(docs, textCol).barrier(StorageLevel.DISK_ONLY)
     val cBigram = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12")).barrier()
     val cLeft = bg.groupBy("w1").agg(count(lit(1)).as("c1"))
     val nFollow = cBigram.groupBy("w1").agg(count(lit(1)).as("nf"))

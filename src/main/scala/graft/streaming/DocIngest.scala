@@ -334,8 +334,8 @@ object DocIngest {
       // (the EmbIngest pattern — without it the filter silently saturates
       // past its fixed capacity and the gate degrades to scan-always).
       // Rebuilt AFTER the append so the fresh filter covers this batch;
-      // the full sizes/ scan is the price of fresh headroom, paid every
-      // compactEvery batches alongside the other full-tree maintenance.
+      // the full sizes/ scan is the price of fresh headroom, paid at
+      // compaction cadence only once the filter is past half fill.
       if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
         phase("maintenance")(graft.util.BloomSidecar.rebuild(spark, indexPath,
           if (graft.util.IdTree.exists(spark, indexPath))

@@ -1,14 +1,9 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Smoke-run of SparkEntry.entry, mirroring the driver's t1 check. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession("local[4]", 4)
     val df = graft.SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())
     df.show(3, 200, vertical = false)

@@ -23,11 +23,7 @@ import org.apache.spark.sql.graftbridge.PlanProbe
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val names = if (args.nonEmpty) args.toSeq else Seq("q01_pricing", "q13_enrich", "q20_join_agg", "q31_dedup_ngram", "q35_sim_topk", "q05_gap_audit")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession("local[4]", 4)
     if (names.headOption.contains("--docingest")) {
       require(names.length == 2, "usage: PlanDump --docingest <outDir>")
       docIngest(spark, names(1))

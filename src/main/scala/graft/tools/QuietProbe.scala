@@ -1,13 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Probe: pin a query's HONEST cost on a quiet host — the PqResidualProbe
-  * protocol generalized (warm JVM, min of N back-to-back runs, GC time
+/** Probe: pin a query's HONEST cost on a quiet host (warm JVM, min of N back-to-back runs, GC time
   * alongside each wall number so a GC-dominated run is visible instead of
-  * argued about). Mirrors Bench's session config exactly (local[32],
-  * shuffle=32, AQE, ANSI) so the number answers "what should the bench
+  * argued about). Runs Bench's session posture ([[graft.GraftSession]]
+  * on local[32]) so the number answers "what should the bench
   * read on an idle machine", not a differently-tuned question.
   *
   * SPARK_GRAFT_PROBE_QUERIES: comma-separated SparkEntry query names
@@ -30,15 +28,8 @@ object QuietProbe {
     val names = sys.env.getOrElse("SPARK_GRAFT_PROBE_QUERIES",
       "q68_dup_windows,q69_pagerank").split(",").map(_.trim).toSeq
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "3").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = 32
+    val spark = graft.GraftSession(s"local[$cpus]", cpus)
     import scala.jdk.CollectionConverters._
     def gcMs: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
@@ -110,7 +101,7 @@ object QuietProbe {
         "\"" + k + "\":" + f3(s)
       }.mkString("{", ",", "}")
       val hist =
-        s"""{"round":"$label","sf":"$sfDir","quiet":true,"commit":"${graft.Bench.codeStamp()}","contaminated":[],"queries":$qs,"bench_only":{},"steal_max_pct":$stealJson}"""
+        s"""{"round":"$label","sf":"$sfDir","cpus":$cpus,"quiet":true,"commit":"${graft.Bench.codeStamp()}","contaminated":[],"queries":$qs,"bench_only":{},"steal_max_pct":$stealJson}"""
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_HISTORY.jsonl"),
         (hist + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
         java.nio.file.StandardOpenOption.CREATE,

@@ -1,7 +1,7 @@
 package graft.util
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -54,13 +54,8 @@ object BloomSidecar {
   /** The serialized filter, or None when the tree predates the sidecar
     * (callers then fall back to the exact scan unconditionally and
     * [[fold]] bootstraps the sidecar from the full stored-id frame). */
-  def read(spark: SparkSession, treePath: String): Option[Array[Byte]] = {
-    val fs = Lsm.fs(spark, treePath)
-    Lsm.recoverSwap(fs, treePath, "bloom")
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir(treePath)))) None
-    else Some(spark.read.parquet(dir(treePath)).select("bits")
-      .collect()(0).getAs[Array[Byte]](0))
-  }
+  def read(spark: SparkSession, treePath: String): Option[Array[Byte]] =
+    storedRow(spark, treePath).map(_.getAs[Array[Byte]]("bits"))
 
   /** The stored filter, deserialized once and shipped once per executor.
     * The caller owns it: `destroy()` it when the frames that probe it are
@@ -82,6 +77,20 @@ object BloomSidecar {
     * reclaims (see [[broadcast]]). */
   def probe(filterBytes: Array[Byte], key: Column): Column =
     probe(broadcast(SparkSession.active, filterBytes), key)
+
+  /** The stored sidecar row after crash recovery, or None when the tree
+    * has no sidecar. */
+  private def storedRow(spark: SparkSession, treePath: String): Option[Row] = {
+    val fs = Lsm.fs(spark, treePath)
+    Lsm.recoverSwap(fs, treePath, "bloom")
+    if (!fs.exists(new org.apache.hadoop.fs.Path(dir(treePath)))) None
+    else Some(spark.read.parquet(dir(treePath)).collect()(0))
+  }
+
+  /** The row's tracked id count; -1 (unknown) on a pre-counter row. */
+  private def nItems(row: Row): Long =
+    if (row.schema.fieldNames.contains("n_items")) row.getAs[Long]("n_items")
+    else -1L
 
   private def build(ids: DataFrame, idCol: String, expectedItems: Long,
       fpp: Double): BloomFilter = {
@@ -192,59 +201,67 @@ object BloomSidecar {
   def fold(spark: SparkSession, treePath: String, newIds: DataFrame,
       idCol: String, batchId: Long, storedIds: => DataFrame,
       expectedItems: Long = 500000L, fpp: Double = 0.01): Unit = {
-    val fs = Lsm.fs(spark, treePath)
-    Lsm.recoverSwap(fs, treePath, "bloom")
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir(treePath)))) {
-      val all = storedIds.select(col(idCol)).unionByName(newIds.select(col(idCol)))
-        .distinct()
-      val n = all.count()
-      val cap = math.max(expectedItems, 2 * n)
-      write(spark, treePath, build(all, idCol, cap, fpp),
-        cap, fpp, batchId, n, batchId)
-      logFill(treePath, batchId, cap, n)
-    } else {
-      val meta = spark.read.parquet(dir(treePath)).collect()(0)
-      val (cap, p) = (meta.getAs[Long]("expected_items"),
-        meta.getAs[Double]("fpp"))
-      // counter carried across folds: stored + this batch, EXACT under
-      // replay — counted_batch records the highest batch already folded
-      // into n_items, so a crashed batch's retry (batchId <=
-      // counted_batch: the sidecar committed before the crash) skips the
-      // increment instead of re-counting the same ids, which could push
-      // fill past 1.0 and trigger spurious SATURATED warnings/rebuilds.
-      // A pre-counter sidecar stays unknown (-1) until its first rebuild
-      // resets it exactly; a pre-counted_batch sidecar (r13) counts once
-      // more on a replay and self-corrects at this fold's write.
-      val storedN = if (meta.schema.fieldNames.contains("n_items"))
-        meta.getAs[Long]("n_items") else -1L
-      val countedBatch = if (meta.schema.fieldNames.contains("counted_batch"))
-        meta.getAs[Long]("counted_batch") else Long.MinValue
-      val n = if (storedN < 0) -1L
-        else if (batchId <= countedBatch && countedBatch != Long.MinValue) storedN
-        else storedN + newIds.select(col(idCol)).distinct().count()
-      val stored = BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(meta.getAs[Array[Byte]]("bits")))
-      stored.mergeInPlace(build(newIds, idCol, cap, p))
-      val countedOut =
-        if (countedBatch == Long.MinValue) batchId
-        else math.max(batchId, countedBatch)
-      write(spark, treePath, stored, cap, p, batchId, n, countedOut)
-      logFill(treePath, batchId, cap, n)
+    storedRow(spark, treePath) match {
+      case None =>
+        val all = storedIds.select(col(idCol)).unionByName(newIds.select(col(idCol)))
+          .distinct()
+        val n = all.count()
+        val cap = math.max(expectedItems, 2 * n)
+        write(spark, treePath, build(all, idCol, cap, fpp),
+          cap, fpp, batchId, n, batchId)
+        logFill(treePath, batchId, cap, n)
+      case Some(meta) =>
+        val (cap, p) = (meta.getAs[Long]("expected_items"),
+          meta.getAs[Double]("fpp"))
+        // counter carried across folds: stored + this batch, EXACT under
+        // replay — counted_batch records the highest batch already folded
+        // into n_items, so a crashed batch's retry (batchId <=
+        // counted_batch: the sidecar committed before the crash) skips the
+        // increment instead of re-counting the same ids, which could push
+        // fill past 1.0 and trigger spurious SATURATED warnings/rebuilds.
+        // A pre-counter sidecar stays unknown (-1) until its first rebuild
+        // resets it exactly; a pre-counted_batch sidecar (r13) counts once
+        // more on a replay and self-corrects at this fold's write.
+        val storedN = nItems(meta)
+        val countedBatch = if (meta.schema.fieldNames.contains("counted_batch"))
+          meta.getAs[Long]("counted_batch") else Long.MinValue
+        val n = if (storedN < 0) -1L
+          else if (batchId <= countedBatch && countedBatch != Long.MinValue) storedN
+          else storedN + newIds.select(col(idCol)).distinct().count()
+        val stored = BloomFilter.readFrom(
+          new java.io.ByteArrayInputStream(meta.getAs[Array[Byte]]("bits")))
+        stored.mergeInPlace(build(newIds, idCol, cap, p))
+        val countedOut =
+          if (countedBatch == Long.MinValue) batchId
+          else math.max(batchId, countedBatch)
+        write(spark, treePath, stored, cap, p, batchId, n, countedOut)
+        logFill(treePath, batchId, cap, n)
     }
   }
 
   /** Re-create the sidecar from the tree's full id frame with ≥2×
     * headroom over the current id count — the saturation escape hatch,
     * run at compaction cadence (compaction already pays a full-tree
-    * pass, and the sidecar is correct-but-slow until then). */
-  def rebuild(spark: SparkSession, treePath: String, storedIds: DataFrame,
+    * pass, and the sidecar is correct-but-slow until then).
+    *
+    * A sidecar whose tracked count is known and at most half its capacity
+    * already has that headroom: a rebuild would write the same capacity
+    * and the same bits, so it returns without reading `storedIds`. A
+    * pre-counter sidecar (unknown count) or one past half fill rebuilds. */
+  def rebuild(spark: SparkSession, treePath: String, storedIds: => DataFrame,
       idCol: String, batchId: Long, minItems: Long = 500000L,
       fpp: Double = 0.01): Unit = {
-    val distinctIds = storedIds.select(col(idCol)).distinct()
-    val n = distinctIds.count()
-    val cap = math.max(minItems, 2 * n)
-    write(spark, treePath, build(distinctIds, idCol, cap, fpp), cap, fpp,
-      batchId, n, batchId)
-    logFill(treePath, batchId, cap, n)
+    val headroom = storedRow(spark, treePath).exists { meta =>
+      val n = nItems(meta)
+      n >= 0 && 2 * n <= meta.getAs[Long]("expected_items")
+    }
+    if (!headroom) {
+      val distinctIds = storedIds.select(col(idCol)).distinct()
+      val n = distinctIds.count()
+      val cap = math.max(minItems, 2 * n)
+      write(spark, treePath, build(distinctIds, idCol, cap, fpp), cap, fpp,
+        batchId, n, batchId)
+      logFill(treePath, batchId, cap, n)
+    }
   }
 }

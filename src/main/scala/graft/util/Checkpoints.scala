@@ -1,6 +1,7 @@
 package graft.util
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Shared checkpoint-root bootstrap for operators that materialize a result
   * OFF their round caches (connected components, PageRank): a reliable
@@ -12,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * On a cluster the deployment sets `spark.sparkContext.setCheckpointDir`
   * to durable storage and this helper never creates anything. In local mode
   * (tests, Verify, Bench) it creates a temp root once per JVM and removes
-  * it at exit; the graft entrypoints additionally set
+  * it at exit; [[graft.GraftSession]] sets
   * `spark.cleaner.referenceTracking.cleanCheckpoints=true` so each call's
   * checkpoint files are reclaimed when its result RDD is GC'd. */
 object Checkpoints {
@@ -25,55 +26,37 @@ object Checkpoints {
     * when the RDD is GC'd (ContextCleaner), so daemons never accumulate
     * state.
     *
-    * Mechanism is deployment-adaptive (r16 measurement: reliable
+    * Mechanism follows the deployment (r16 measurement: reliable
     * checkpoints were 0.7-5.2 s of pure serialize-to-disk-and-read-back
     * per graph query at sf0.1, and every byte of it is waste on a single
     * machine): on a LOCAL master the executor IS the driver JVM, so a
     * reliable file checkpoint survives exactly the failures a
     * localCheckpoint survives (none that matter — losing the executor
     * loses the driver and the job either way) and buys only disk traffic;
-    * `localCheckpoint` (MEMORY_AND_DISK blocks, spill-safe) is the
-    * strictly-better barrier there. On a CLUSTER master the default stays
-    * the reliable file checkpoint: an iterative job whose lineage is
-    * truncated onto executor-local blocks cannot recompute them after an
-    * executor loss, and at 100 TB round counts that trade is wrong by
-    * default. `spark.graft.checkpoint.reliable=true|false` overrides in
-    * either direction (e.g. a cluster job that prefers restart-on-loss
-    * speed can opt into local). */
-  def barrier(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    * `localCheckpoint` at `level` is the strictly-better barrier there. On
+    * a CLUSTER master it is the reliable file checkpoint (already on disk;
+    * `level` does not apply): an iterative job whose lineage is truncated
+    * onto executor-local blocks cannot recompute them after an executor
+    * loss, and at 100 TB round counts that trade is wrong.
+    *
+    * `level` is MEMORY_AND_DISK (spill-safe) for node- and doc-sized
+    * tables. CORPUS-SCALE pools (exploded gram/posting/bigram tables) pass
+    * DISK_ONLY: a big pool held as memory blocks competes with the very
+    * joins that consume it under the unified memory manager (r17
+    * measurement: q129's 11.5M-row verification join ran ~30% slower with
+    * its postings pool squatting in an 8 GiB driver's storage memory than
+    * with the same pool on disk). */
+  def barrier(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
     val spark = df.sparkSession
-    val reliable = spark.conf.getOption("spark.graft.checkpoint.reliable")
-      .map(_.toBoolean)
-      .getOrElse(!spark.sparkContext.isLocal)
-    if (reliable) { ensureDir(spark); df.checkpoint(eager = true) }
-    else df.localCheckpoint(eager = true)
-  }
-
-  /** [[barrier]] for CORPUS-SCALE pools (exploded gram/posting/bigram
-    * tables): on a local master the materialized blocks go to DISK_ONLY
-    * instead of MEMORY_AND_DISK. A big pool held as memory blocks competes
-    * with the very joins that consume it under the unified memory manager
-    * (r17 measurement: q129's 11.5M-row verification join ran ~30% slower
-    * with its postings pool squatting in an 8 GiB driver's storage memory
-    * than with the same pool on disk); node-/doc-sized tables keep the
-    * in-memory [[barrier]]. Cluster default unchanged (reliable file
-    * checkpoint — already disk). */
-  def barrierDisk(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val spark = df.sparkSession
-    val reliable = spark.conf.getOption("spark.graft.checkpoint.reliable")
-      .map(_.toBoolean)
-      .getOrElse(!spark.sparkContext.isLocal)
-    if (reliable) { ensureDir(spark); df.checkpoint(eager = true) }
-    else df.localCheckpoint(eager = true,
-      org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    if (spark.sparkContext.isLocal) df.localCheckpoint(eager = true, level)
+    else { ensureDir(spark); df.checkpoint(eager = true) }
   }
 
   /** `df.barrier()` postfix form of [[barrier]] so operator code keeps the
     * `.checkpoint(eager = true)`-style call shape. */
-  implicit class BarrierOps(private val df: org.apache.spark.sql.DataFrame)
-      extends AnyVal {
-    def barrier(): org.apache.spark.sql.DataFrame = Checkpoints.barrier(df)
-    def barrierDisk(): org.apache.spark.sql.DataFrame = Checkpoints.barrierDisk(df)
+  implicit class BarrierOps(private val df: DataFrame) extends AnyVal {
+    def barrier(level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
+      Checkpoints.barrier(df, level)
   }
 
   def ensureDir(spark: SparkSession): Unit =

@@ -3,20 +3,14 @@ package graft
 import graft.plans.ApproxDistinctRewrite
 import org.apache.spark.sql.functions._
 
-/** The opt-in COUNT(DISTINCT) -> HLL++ downgrade: same session, rule
-  * attached via experimental.extraOptimizations (the RangeJoinRuleSpec
-  * injection point; GraftExtensions wires it through spark.sql.extensions). */
+/** The opt-in COUNT(DISTINCT) -> HLL++ downgrade, as the shared session's
+  * GraftExtensions install it. */
 class ApproxDistinctRuleSpec extends SparkSpec {
   import spark.implicits._
 
   private def withRule[A](rsd: String)(f: => A): A = {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ ApproxDistinctRewrite
     spark.conf.set(ApproxDistinctRewrite.RsdConf, rsd)
-    try f finally {
-      spark.conf.unset(ApproxDistinctRewrite.RsdConf)
-      spark.experimental.extraOptimizations = prev
-    }
+    try f finally spark.conf.unset(ApproxDistinctRewrite.RsdConf)
   }
 
   private def fixture(): Unit =

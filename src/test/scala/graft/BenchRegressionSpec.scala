@@ -10,21 +10,22 @@ import org.scalatest.funsuite.AnyFunSuite
 class BenchRegressionSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.1"
+  private val cpus = 32
   private def hist(round: String, contaminated: Seq[String],
       qs: (String, Double)*): String = {
     val c = contaminated.map("\"" + _ + "\"").mkString("[", ",", "]")
     val q = qs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    s"""{"round":"$round","sf":"$sf","contaminated":$c,"queries":$q,"bench_only":{}}"""
+    s"""{"round":"$round","sf":"$sf","cpus":$cpus,"contaminated":$c,"queries":$q,"bench_only":{}}"""
   }
   private def quiet(round: String, qs: (String, Double)*): String = {
     val q = qs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    s"""{"round":"$round","sf":"$sf","quiet":true,"contaminated":[],"queries":$q,"bench_only":{}}"""
+    s"""{"round":"$round","sf":"$sf","cpus":$cpus,"quiet":true,"contaminated":[],"queries":$q,"bench_only":{}}"""
   }
 
   test("flags >1.5x slowdowns, worst ratio first; small deltas and new queries pass") {
     val lines = Seq(hist("r9", Seq.empty,
       "q68" -> 2.0, "q01" -> 0.9, "q05" -> 0.1, "q69" -> 3.5))
-    val (_, _, got, _) = Bench.findRegressions(lines, sf,
+    val (_, _, got, _) = Bench.findRegressions(lines, sf, cpus,
       Seq("q68" -> 5.0, "q01" -> 1.0, "q05" -> 0.25, "q69" -> 5.4,
         "q_new" -> 9.9),
       contaminatedNow = Set.empty)
@@ -35,7 +36,7 @@ class BenchRegressionSpec extends AnyFunSuite {
 
   test("contamination in either round suppresses the flag") {
     val lines = Seq(hist("r9", Seq("q68"), "q68" -> 2.0, "q69" -> 3.5))
-    val (_, _, got, _) = Bench.findRegressions(lines, sf,
+    val (_, _, got, _) = Bench.findRegressions(lines, sf, cpus,
       Seq("q68" -> 9.0, "q69" -> 9.0), contaminatedNow = Set("q69"))
     assert(got.isEmpty)
   }
@@ -43,17 +44,17 @@ class BenchRegressionSpec extends AnyFunSuite {
   test("only the LAST same-sf full-board entry is the baseline; other SFs ignored") {
     val lines = Seq(
       hist("r8", Seq.empty, "q68" -> 9.0), // stale round: would not flag
-      s"""{"round":"rX","sf":"/elsewhere","contaminated":[],"queries":{"q68":0.1},"bench_only":{}}""",
+      s"""{"round":"rX","sf":"/elsewhere","cpus":$cpus,"contaminated":[],"queries":{"q68":0.1},"bench_only":{}}""",
       hist("r9", Seq.empty, "q68" -> 2.0)) // the real baseline
-    val (_, _, got, _) = Bench.findRegressions(lines, sf, Seq("q68" -> 5.0), Set.empty)
+    val (_, _, got, _) = Bench.findRegressions(lines, sf, cpus, Seq("q68" -> 5.0), Set.empty)
     assert(got === Seq(("q68", 2.0, 5.0)))
   }
 
   test("no history, or no same-sf line, means no flags") {
-    assert(Bench.findRegressions(Seq.empty, sf, Seq("q" -> 9.0), Set.empty)
+    assert(Bench.findRegressions(Seq.empty, sf, cpus, Seq("q" -> 9.0), Set.empty)
       ._3.isEmpty)
-    val other = Seq(s"""{"round":"r9","sf":"/other","contaminated":[],"queries":{"q":1.0},"bench_only":{}}""")
-    assert(Bench.findRegressions(other, sf, Seq("q" -> 9.0), Set.empty)
+    val other = Seq(s"""{"round":"r9","sf":"/other","cpus":$cpus,"contaminated":[],"queries":{"q":1.0},"bench_only":{}}""")
+    assert(Bench.findRegressions(other, sf, cpus, Seq("q" -> 9.0), Set.empty)
       ._3.isEmpty)
   }
 
@@ -61,8 +62,8 @@ class BenchRegressionSpec extends AnyFunSuite {
     // Same key appears in queries (2.0) and bench_only (0.1): an unbounded
     // parse would keep the bench_only 0.1 and flag 2.1 as a 21x regression.
     val line =
-      s"""{"round":"r9","sf":"$sf","contaminated":[],"queries":{"q68":2.0},"bench_only":{"q68":0.1}}"""
-    val (_, _, got, _) = Bench.findRegressions(Seq(line), sf, Seq("q68" -> 2.1),
+      s"""{"round":"r9","sf":"$sf","cpus":$cpus,"contaminated":[],"queries":{"q68":2.0},"bench_only":{"q68":0.1}}"""
+    val (_, _, got, _) = Bench.findRegressions(Seq(line), sf, cpus, Seq("q68" -> 2.1),
       Set.empty)
     assert(got.isEmpty)
   }
@@ -73,7 +74,7 @@ class BenchRegressionSpec extends AnyFunSuite {
     // reading flags against the honest 2.0.
     val lines = Seq(hist("r9", Seq("q68"), "q68" -> 15.0, "q01" -> 1.0),
       quiet("r10q", "q68" -> 2.0))
-    val (_, _, got, _) = Bench.findRegressions(lines, sf,
+    val (_, _, got, _) = Bench.findRegressions(lines, sf, cpus,
       Seq("q68" -> 9.0, "q01" -> 1.0), Set.empty)
     assert(got === Seq(("q68", 2.0, 9.0)))
   }
@@ -81,7 +82,7 @@ class BenchRegressionSpec extends AnyFunSuite {
   test("a quiet row lowers a loaded (unstamped) baseline via min") {
     val lines = Seq(hist("r9", Seq.empty, "q68" -> 5.0, "q01" -> 1.0),
       quiet("r10q", "q68" -> 2.0))
-    val (_, _, got, _) = Bench.findRegressions(lines, sf,
+    val (_, _, got, _) = Bench.findRegressions(lines, sf, cpus,
       Seq("q68" -> 4.0, "q01" -> 1.0), Set.empty)
     // vs the bench 5.0 no flag; vs the quiet 2.0, 4.0 is a 2x regression
     assert(got === Seq(("q68", 2.0, 4.0)))
@@ -90,7 +91,7 @@ class BenchRegressionSpec extends AnyFunSuite {
   test("quiet rows BEFORE the last full-board entry do not overlay it") {
     val lines = Seq(quiet("r8q", "q68" -> 0.5),
       hist("r9", Seq.empty, "q68" -> 2.0))
-    val (_, _, got, _) = Bench.findRegressions(lines, sf, Seq("q68" -> 2.2),
+    val (_, _, got, _) = Bench.findRegressions(lines, sf, cpus, Seq("q68" -> 2.2),
       Set.empty)
     assert(got.isEmpty) // 2.2 vs 2.0, not vs the stale 0.5
   }
@@ -105,7 +106,7 @@ class BenchRegressionSpec extends AnyFunSuite {
     val (prev, now) = board(10, 2.0)
     val lines = Seq(hist("r9", Seq.empty, prev: _*))
     val (inflation, contaminated, got, _) =
-      Bench.findRegressions(lines, sf, now, Set.empty)
+      Bench.findRegressions(lines, sf, cpus, now, Set.empty)
     assert(math.abs(inflation - 2.0) < 1e-9)
     assert(contaminated, "a 2x median is a loaded window, stamped as such")
     assert(got.isEmpty) // load-normalized, every ratio is exactly 1.0
@@ -120,7 +121,7 @@ class BenchRegressionSpec extends AnyFunSuite {
     val (prev, now) = board(20, 1.139)
     val lines = Seq(hist("r13", Seq.empty, prev: _*))
     val (inflation, contaminated, got, _) =
-      Bench.findRegressions(lines, sf, now, Set.empty)
+      Bench.findRegressions(lines, sf, cpus, now, Set.empty)
     assert(math.abs(inflation - 1.139) < 1e-9)
     assert(contaminated, "median 1.139 > 1.08 must stamp the window")
     assert(got.isEmpty)
@@ -130,7 +131,7 @@ class BenchRegressionSpec extends AnyFunSuite {
     val (prev, now) = board(20, 1.05)
     val lines = Seq(hist("r13", Seq.empty, prev: _*))
     val (inflation, contaminated, got, _) =
-      Bench.findRegressions(lines, sf, now, Set.empty)
+      Bench.findRegressions(lines, sf, cpus, now, Set.empty)
     assert(math.abs(inflation - 1.05) < 1e-9)
     assert(!contaminated, "ordinary jitter must not stamp the window")
     assert(got.isEmpty)
@@ -171,7 +172,7 @@ class BenchRegressionSpec extends AnyFunSuite {
     val lines = Seq(hist("r9", Seq.empty, stable ++ spiky ++ unstampedSlow: _*))
     val now = stable ++ spiky.map { case (k, v) => k -> v * 5.0 } ++
       unstampedSlow.map { case (k, v) => k -> v * 6.0 }
-    val (inflation, contaminated, got, _) = Bench.findRegressions(lines, sf,
+    val (inflation, contaminated, got, _) = Bench.findRegressions(lines, sf, cpus,
       now, contaminatedNow = Set("qa", "qb", "qc"))
     assert(math.abs(inflation - 1.0) < 1e-9, "the median gate alone is blind")
     assert(contaminated, "3/28 stamped > 5% must stamp the window")
@@ -183,7 +184,7 @@ class BenchRegressionSpec extends AnyFunSuite {
     // noisy query, not ambient load.
     val prev = (1 to 5).map(i => s"q$i" -> 1.0)
     val lines = Seq(hist("r9", Seq.empty, prev: _*))
-    val (_, contaminated, _, _) = Bench.findRegressions(lines, sf,
+    val (_, contaminated, _, _) = Bench.findRegressions(lines, sf, cpus,
       prev, contaminatedNow = Set("q1"))
     assert(!contaminated)
   }
@@ -193,7 +194,7 @@ class BenchRegressionSpec extends AnyFunSuite {
     // an earlier full-board window of the SAME round timed it at 2.1 s —
     // host noise here, not a regression.
     val lines = Seq(hist("r9", Seq.empty, "q68" -> 2.0, "q01" -> 1.0))
-    val (_, _, got, _) = Bench.findRegressions(lines, sf,
+    val (_, _, got, _) = Bench.findRegressions(lines, sf, cpus,
       Seq("q68" -> 6.3, "q01" -> 1.0), Set.empty,
       sameRoundMins = Map("q68" -> 2.1))
     assert(got.isEmpty)
@@ -201,7 +202,7 @@ class BenchRegressionSpec extends AnyFunSuite {
 
   test("a regression slow in EVERY window of the round still flags") {
     val lines = Seq(hist("r9", Seq.empty, "q68" -> 2.0, "q01" -> 1.0))
-    val (_, _, got, _) = Bench.findRegressions(lines, sf,
+    val (_, _, got, _) = Bench.findRegressions(lines, sf, cpus,
       Seq("q68" -> 6.3, "q01" -> 1.0), Set.empty,
       sameRoundMins = Map("q68" -> 5.9))
     assert(got === Seq(("q68", 2.0, 5.9)),
@@ -213,7 +214,7 @@ class BenchRegressionSpec extends AnyFunSuite {
     // 6/1.05 >> 1.5x — a clean-enough window still ships the flag.
     val (prev, now) = board(10, 1.05)
     val lines = Seq(hist("r9", Seq.empty, prev :+ ("q_bad" -> 1.0): _*))
-    val (inflation, contaminated, got, _) = Bench.findRegressions(lines, sf,
+    val (inflation, contaminated, got, _) = Bench.findRegressions(lines, sf, cpus,
       now :+ ("q_bad" -> 6.0), Set.empty)
     assert(inflation > 1.0 && inflation < 1.08 && !contaminated)
     assert(got.map(_._1) === Seq("q_bad"))
@@ -221,7 +222,7 @@ class BenchRegressionSpec extends AnyFunSuite {
     // stamp): the same regression defers to needs-re-time, never dropped
     val (prev2, now2) = board(10, 1.2)
     val lines2 = Seq(hist("r9", Seq.empty, prev2 :+ ("q_bad" -> 1.0): _*))
-    val (_, contaminated2, got2, retime2) = Bench.findRegressions(lines2, sf,
+    val (_, contaminated2, got2, retime2) = Bench.findRegressions(lines2, sf, cpus,
       now2 :+ ("q_bad" -> 6.0), Set.empty)
     assert(contaminated2 && got2.isEmpty)
     assert(retime2.map(_._1) === Seq("q_bad"))
@@ -233,7 +234,7 @@ class BenchRegressionSpec extends AnyFunSuite {
     val (prev, now) = board(10, 1.0)
     val tiny = (1 to 9).map(i => s"t$i" -> 0.05)
     val lines = Seq(hist("r9", Seq.empty, prev ++ tiny: _*))
-    val (inflation, _, _, _) = Bench.findRegressions(lines, sf,
+    val (inflation, _, _, _) = Bench.findRegressions(lines, sf, cpus,
       now ++ tiny.map { case (k, _) => k -> 0.5 }, Set.empty)
     assert(math.abs(inflation - 1.0) < 1e-9)
   }
@@ -243,7 +244,7 @@ class BenchRegressionSpec extends AnyFunSuite {
     // 3 samples the gate must flag all three instead of normalizing away.
     val (prev, now) = board(3, 3.0)
     val lines = Seq(hist("r9", Seq.empty, prev: _*))
-    val (inflation, _, got, _) = Bench.findRegressions(lines, sf, now, Set.empty)
+    val (inflation, _, got, _) = Bench.findRegressions(lines, sf, cpus, now, Set.empty)
     assert(inflation === 1.0)
     assert(got.size === 3)
   }
@@ -256,7 +257,7 @@ class BenchRegressionSpec extends AnyFunSuite {
     val stable = (1 to 24).map(i => s"qs$i" -> (1.0 + i * 0.1))
     val lines = Seq(hist("r9", Seq.empty, stable :+ ("q_bad" -> 1.0): _*))
     val now = stable :+ ("q_bad" -> 6.0)
-    val (_, contaminated, got, _) = Bench.findRegressions(lines, sf, now,
+    val (_, contaminated, got, _) = Bench.findRegressions(lines, sf, cpus, now,
       contaminatedNow = Set("x01_twin", "x02_twin", "x03_twin"))
     assert(!contaminated, "off-board stamps must not stamp the window")
     assert(got.map(_._1) === Seq("q_bad"),
@@ -265,7 +266,7 @@ class BenchRegressionSpec extends AnyFunSuite {
 
   test("a same-round-refuted flag is reported as needs-re-time, not dropped") {
     val lines = Seq(hist("r9", Seq.empty, "q68" -> 2.0, "q01" -> 1.0))
-    val (_, _, got, retime) = Bench.findRegressions(lines, sf,
+    val (_, _, got, retime) = Bench.findRegressions(lines, sf, cpus,
       Seq("q68" -> 6.3, "q01" -> 1.0), Set.empty,
       sameRoundMins = Map("q68" -> 2.1))
     assert(got.isEmpty)
@@ -278,7 +279,7 @@ class BenchRegressionSpec extends AnyFunSuite {
     // 4x (2x beyond ambient) is a raw flag that must stay visible.
     val (prev, now) = board(10, 2.0)
     val lines = Seq(hist("r9", Seq.empty, prev :+ ("q_bad" -> 1.0): _*))
-    val (_, contaminated, got, retime) = Bench.findRegressions(lines, sf,
+    val (_, contaminated, got, retime) = Bench.findRegressions(lines, sf, cpus,
       now :+ ("q_bad" -> 4.0), Set.empty)
     assert(contaminated && got.isEmpty)
     assert(retime.map(_._1) === Seq("q_bad"),
@@ -291,14 +292,14 @@ class BenchRegressionSpec extends AnyFunSuite {
     // its noise flags; a label-only contradiction must downgrade the
     // flag rather than ship it as a regression or silently clear it.
     val lines = Seq(hist("r9", Seq.empty, "q68" -> 2.0, "q01" -> 1.0))
-    val (_, _, got, retime) = Bench.findRegressions(lines, sf,
+    val (_, _, got, retime) = Bench.findRegressions(lines, sf, cpus,
       Seq("q68" -> 6.3, "q01" -> 1.0), Set.empty,
       sameRoundMins = Map.empty, // no same-commit window
       sameRoundLabelMins = Map("q68" -> 2.1)) // an earlier-commit window
     assert(got.isEmpty, "contradicted-but-unproven must not ship as a regression")
     assert(retime === Seq(("q68", 2.0, 6.3)))
     // but a flag slow in EVERY window of the round (any commit) still ships
-    val (_, _, got2, _) = Bench.findRegressions(lines, sf,
+    val (_, _, got2, _) = Bench.findRegressions(lines, sf, cpus,
       Seq("q68" -> 6.3, "q01" -> 1.0), Set.empty,
       sameRoundMins = Map.empty, sameRoundLabelMins = Map("q68" -> 5.9))
     assert(got2 === Seq(("q68", 2.0, 6.3)),
@@ -325,9 +326,9 @@ class BenchRegressionSpec extends AnyFunSuite {
     // commit strings => sameRoundMinsOf finds nothing to refute with
     val stamp1 = "abc123def456+" + d1
     val hist = Seq(
-      s"""{"round":"r9","sf":"/d","commit":"$stamp1","queries":{"q1":1.0}}""")
-    assert(Bench.sameRoundMinsOf(hist, "r9", "/d", stamp1) == Map("q1" -> 1.0))
-    assert(Bench.sameRoundMinsOf(hist, "r9", "/d",
+      s"""{"round":"r9","sf":"/d","cpus":$cpus,"commit":"$stamp1","queries":{"q1":1.0}}""")
+    assert(Bench.sameRoundMinsOf(hist, "r9", "/d", cpus, stamp1) == Map("q1" -> 1.0))
+    assert(Bench.sameRoundMinsOf(hist, "r9", "/d", cpus,
       "abc123def456+" + Bench.sourceDigest(dir.toString)).isEmpty,
       "same HEAD, different working-tree bytes: no refutation")
   }
@@ -384,21 +385,21 @@ class BenchRegressionSpec extends AnyFunSuite {
       (Seq("q68" -> 8.0, "q01" -> 3.0) ++
         corruptStamps.map(_ -> 1.0) ++
         (1 to 20).map(i => s"qf$i" -> 1.0)): _*)
-    val (_, _, got, _) = Bench.findRegressions(Seq(clean, corrupt), sf,
+    val (_, _, got, _) = Bench.findRegressions(Seq(clean, corrupt), sf, cpus,
       Seq("q68" -> 5.0, "q01" -> 1.0), Set.empty)
     assert(got === Seq(("q68", 2.0, 5.0)),
       "the flag compares against the clean r15 row, not the corrupt r16 one")
     // explicit markers disqualify regardless of stamps
-    val stamped = s"""{"round":"r16","sf":"$sf","window_contaminated":true,"contaminated":[],"queries":{"q68":8.0},"bench_only":{}}"""
-    val truncated = s"""{"round":"r16","sf":"$sf","window_contaminated":false,"truncated":true,"contaminated":[],"queries":{"q68":8.0},"bench_only":{}}"""
+    val stamped = s"""{"round":"r16","sf":"$sf","cpus":$cpus,"window_contaminated":true,"contaminated":[],"queries":{"q68":8.0},"bench_only":{}}"""
+    val truncated = s"""{"round":"r16","sf":"$sf","cpus":$cpus,"window_contaminated":false,"truncated":true,"contaminated":[],"queries":{"q68":8.0},"bench_only":{}}"""
     for (bad <- Seq(stamped, truncated)) {
-      val (_, _, got2, _) = Bench.findRegressions(Seq(clean, bad), sf,
+      val (_, _, got2, _) = Bench.findRegressions(Seq(clean, bad), sf, cpus,
         Seq("q68" -> 5.0, "q01" -> 1.0), Set.empty)
       assert(got2 === Seq(("q68", 2.0, 5.0)))
     }
     // a self-declared CLEAN row (the normal case going forward) is trusted
-    val goodNew = s"""{"round":"r16","sf":"$sf","window_steal_pct":0.1,"window_contaminated":false,"contaminated":[],"queries":{"q68":2.2,"q01":1.0},"bench_only":{}}"""
-    val (_, _, got3, _) = Bench.findRegressions(Seq(clean, goodNew), sf,
+    val goodNew = s"""{"round":"r16","sf":"$sf","cpus":$cpus,"window_steal_pct":0.1,"window_contaminated":false,"contaminated":[],"queries":{"q68":2.2,"q01":1.0},"bench_only":{}}"""
+    val (_, _, got3, _) = Bench.findRegressions(Seq(clean, goodNew), sf, cpus,
       Seq("q68" -> 5.0, "q01" -> 1.0), Set.empty)
     assert(got3 === Seq(("q68", 2.2, 5.0)))
   }
@@ -409,31 +410,31 @@ class BenchRegressionSpec extends AnyFunSuite {
     // NOT stamp the window; its flags ship load-normalized.
     val (prev, now) = board(20, 1.09)
     val lines = Seq(hist("r13", Seq.empty, prev :+ ("q_bad" -> 1.0): _*))
-    val (infl, contaminated, got, _) = Bench.findRegressions(lines, sf,
+    val (infl, contaminated, got, _) = Bench.findRegressions(lines, sf, cpus,
       now :+ ("q_bad" -> 6.0), Set.empty, windowStealPct = 0.1)
     assert(math.abs(infl - 1.09) < 1e-9 && !contaminated,
       "quiet measured steal refutes the ambient-load hypothesis")
     assert(got.map(_._1) === Seq("q_bad"), "the real regression still ships")
     // same inflation with real steal: stamped (ambient load corroborated)
-    val (_, c2, got2, _) = Bench.findRegressions(lines, sf,
+    val (_, c2, got2, _) = Bench.findRegressions(lines, sf, cpus,
       now :+ ("q_bad" -> 6.0), Set.empty, windowStealPct = 2.5)
     assert(c2 && got2.isEmpty)
     // same inflation, quiet steal, but a spiky co-signal (>=3 stamps on
     // board queries): local contention shows in spread, not steal — stamp
-    val (_, c3, _, _) = Bench.findRegressions(lines, sf,
+    val (_, c3, _, _) = Bench.findRegressions(lines, sf, cpus,
       now :+ ("q_bad" -> 6.0),
       contaminatedNow = Set(now.head._1, now(1)._1, now(2)._1),
       windowStealPct = 0.1)
     assert(c3)
     // unknown steal (no /proc, legacy caller): conservative stamp holds
-    val (_, c4, _, _) = Bench.findRegressions(lines, sf,
+    val (_, c4, _, _) = Bench.findRegressions(lines, sf, cpus,
       now :+ ("q_bad" -> 6.0), Set.empty)
     assert(c4)
     // above 1.2 the stamp is unconditional (the r15-end disaster ran at
     // 2.6x with 1-3% steal — co-tenant contention is invisible to steal)
     val (prev5, now5) = board(20, 1.25)
     val lines5 = Seq(hist("r13", Seq.empty, prev5: _*))
-    val (_, c5, _, _) = Bench.findRegressions(lines5, sf, now5, Set.empty,
+    val (_, c5, _, _) = Bench.findRegressions(lines5, sf, cpus, now5, Set.empty,
       windowStealPct = 0.1)
     assert(c5)
   }
@@ -447,14 +448,14 @@ class BenchRegressionSpec extends AnyFunSuite {
     val stable = (1 to 24).map(i => s"qs$i" -> (1.0 + i * 0.1))
     val lines = Seq(hist("r15", Seq.empty, stable :+ ("q76" -> 0.26): _*))
     val now = stable :+ ("q76" -> 1.76) // 6.8x, single-run under burst
-    val (infl, contaminated, got, retime) = Bench.findRegressions(lines, sf,
+    val (infl, contaminated, got, retime) = Bench.findRegressions(lines, sf, cpus,
       now, Set.empty, windowStealPct = 2.2, untrustedNow = Set("q76"))
     assert(math.abs(infl - 1.0) < 1e-9 && !contaminated,
       "untrusted queries must not stamp the window or skew the median")
     assert(got.isEmpty, "an upper-bound reading must not ship as a regression")
     assert(retime.map(_._1) === Seq("q76"), "it defers with the evidence")
     // the same reading from a TRUSTED slot still ships
-    val (_, _, got2, _) = Bench.findRegressions(lines, sf, now, Set.empty,
+    val (_, _, got2, _) = Bench.findRegressions(lines, sf, cpus, now, Set.empty,
       windowStealPct = 2.2)
     assert(got2.map(_._1) === Seq("q76"))
   }
@@ -465,13 +466,13 @@ class BenchRegressionSpec extends AnyFunSuite {
     // bound would MASK the regression. The untrusted field folds into
     // prevContam: no flag against it (and a quiet overlay restores honest
     // flagging).
-    val prevRow = s"""{"round":"r16","sf":"$sf","window_contaminated":false,"contaminated":[],"untrusted":["q76"],"queries":{"q76":1.76,"q01":1.0},"bench_only":{}}"""
-    val (_, _, got, _) = Bench.findRegressions(Seq(prevRow), sf,
+    val prevRow = s"""{"round":"r16","sf":"$sf","cpus":$cpus,"window_contaminated":false,"contaminated":[],"untrusted":["q76"],"queries":{"q76":1.76,"q01":1.0},"bench_only":{}}"""
+    val (_, _, got, _) = Bench.findRegressions(Seq(prevRow), sf, cpus,
       Seq("q76" -> 2.2, "q01" -> 1.0), Set.empty)
     assert(got.isEmpty, "no flag against an upper-bound baseline")
     // quiet overlay replaces the untrusted baseline; the regression flags
     val lines = Seq(prevRow, quiet("r16q", "q76" -> 0.26))
-    val (_, _, got2, _) = Bench.findRegressions(lines, sf,
+    val (_, _, got2, _) = Bench.findRegressions(lines, sf, cpus,
       Seq("q76" -> 2.2, "q01" -> 1.0), Set.empty)
     assert(got2 === Seq(("q76", 0.26, 2.2)))
   }
@@ -481,7 +482,7 @@ class BenchRegressionSpec extends AnyFunSuite {
         q: Double): String = {
       val c = commit.map(h => s""""commit":"$h",""").getOrElse("")
       val qq = if (quiet) """"quiet":true,""" else ""
-      s"""{"round":"$round","sf":"$sf",$qq$c"contaminated":[],"queries":{"q68":$q},"bench_only":{}}"""
+      s"""{"round":"$round","sf":"$sf","cpus":$cpus,$qq$c"contaminated":[],"queries":{"q68":$q},"bench_only":{}}"""
     }
     val lines = Seq(
       row("r13", Some("aaaa"), quiet = false, 2.0), // pre-change window
@@ -490,8 +491,30 @@ class BenchRegressionSpec extends AnyFunSuite {
       row("r12", Some("bbbb"), quiet = false, 1.9), // other round
       row("r13", Some("bbbb"), quiet = false, 2.5),
       row("r13", Some("bbbb"), quiet = false, 2.4))
-    val mins = Bench.sameRoundMinsOf(lines, "r13", sf, "bbbb")
+    val mins = Bench.sameRoundMinsOf(lines, "r13", sf, cpus, "bbbb")
     assert(mins === Map("q68" -> 2.4),
       "min over same-round same-commit full-board rows only")
+  }
+
+  test("baselines match on (sf, cpus): a newer 8-core row never judges a 32-core board") {
+    def row(round: String, cores: Option[Int], qs: (String, Double)*): String = {
+      val c = cores.map(n => s""""cpus":$n,""").getOrElse("")
+      val q = qs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+      s"""{"round":"$round","sf":"$sf",$c"contaminated":[],"queries":$q,"bench_only":{}}"""
+    }
+    val lines = Seq(
+      row("r16", Some(32), "q68" -> 2.0, "q71" -> 1.0),
+      row("r16c8", Some(8), "q68" -> 4.4, "q71" -> 2.2),
+      // a row written before rows carried cpus: never a baseline
+      row("r17", None, "q68" -> 9.0, "q71" -> 9.0))
+    val (_, _, got32, _) = Bench.findRegressions(lines, sf, 32,
+      Seq("q68" -> 5.0, "q71" -> 1.1), Set.empty)
+    assert(got32 === Seq(("q68", 2.0, 5.0)),
+      "the 32-core board is judged against the 32-core row only")
+    val (_, _, got8, _) = Bench.findRegressions(lines, sf, 8,
+      Seq("q68" -> 4.5, "q71" -> 2.3), Set.empty)
+    assert(got8.isEmpty, "the 8-core board at its own scaling is no regression")
+    assert(Bench.findRegressions(lines, sf, 16, Seq("q68" -> 50.0), Set.empty)
+      ._3.isEmpty, "no row at this core count: no baseline, no flags")
   }
 }

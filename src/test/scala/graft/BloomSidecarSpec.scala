@@ -248,9 +248,12 @@ class BloomSidecarSpec extends SparkSpec {
 
   test("rebuild sizes to the tree and keeps full coverage") {
     val dir = java.nio.file.Files.createTempDirectory("bloom-rb").toString + "/t"
-    BloomSidecar.fold(spark, dir, (0L until 10L).toDF("id"), "id", 0L,
-      storedIds = Seq.empty[Long].toDF("id"))
-    BloomSidecar.rebuild(spark, dir, (0L until 500L).toDF("id"), "id", 1L,
+    val empty = Seq.empty[Long].toDF("id")
+    // the tree outgrows the sidecar's capacity (20) before the rebuild
+    BloomSidecar.fold(spark, dir, (0L until 10L).toDF("id"), "id", 0L, empty,
+      expectedItems = 20L)
+    BloomSidecar.fold(spark, dir, (10L until 500L).toDF("id"), "id", 1L, empty)
+    BloomSidecar.rebuild(spark, dir, (0L until 500L).toDF("id"), "id", 2L,
       minItems = 100L)
     val row = spark.read.parquet(s"$dir/bloom")
       .select("expected_items").collect()(0).getLong(0)
@@ -258,5 +261,46 @@ class BloomSidecarSpec extends SparkSpec {
     val bits = BloomSidecar.read(spark, dir).get
     assert((0L until 500L).toDF("id")
       .filter(BloomSidecar.probe(bits, col("id"))).count() == 500L)
+  }
+
+  private def storedBatch(dir: String): Long =
+    spark.read.parquet(s"$dir/bloom").select("counted_batch").head().getLong(0)
+
+  test("rebuild at or below half fill leaves the sidecar untouched and never reads the ids") {
+    val dir = java.nio.file.Files.createTempDirectory("bloom-skip").toString + "/t"
+    BloomSidecar.fold(spark, dir, (0L until 50L).toDF("id"), "id", 0L,
+      Seq.empty[Long].toDF("id"), expectedItems = 100L)
+    BloomSidecar.rebuild(spark, dir,
+      throw new AssertionError("a sidecar with headroom must not scan the tree"),
+      "id", 1L, minItems = 100L)
+    assert(storedBatch(dir) == 0L, "the stored sidecar is the fold's, not a rewrite")
+    assert(BloomSidecar.stats(spark, dir).get == BloomSidecar.Stats(100L, 50L, 0.01))
+  }
+
+  test("rebuild past half fill grows the capacity") {
+    val dir = java.nio.file.Files.createTempDirectory("bloom-grow").toString + "/t"
+    val empty = Seq.empty[Long].toDF("id")
+    BloomSidecar.fold(spark, dir, (0L until 10L).toDF("id"), "id", 0L, empty,
+      expectedItems = 100L)
+    BloomSidecar.fold(spark, dir, (10L until 60L).toDF("id"), "id", 1L, empty)
+    BloomSidecar.rebuild(spark, dir, (0L until 60L).toDF("id"), "id", 2L,
+      minItems = 100L)
+    assert(storedBatch(dir) == 2L)
+    assert(BloomSidecar.stats(spark, dir).get == BloomSidecar.Stats(120L, 60L, 0.01))
+  }
+
+  test("rebuild of a sidecar with an unknown count (n_items = -1) rewrites it") {
+    val dir = java.nio.file.Files.createTempDirectory("bloom-unk").toString + "/t"
+    BloomSidecar.fold(spark, dir, (0L until 10L).toDF("id"), "id", 0L,
+      Seq.empty[Long].toDF("id"), expectedItems = 100L)
+    val fs = graft.util.Lsm.fs(spark, dir)
+    spark.read.parquet(s"$dir/bloom").withColumn("n_items", lit(-1L))
+      .write.parquet(graft.util.Lsm.stagedPath(dir, "bloom", 1L))
+    graft.util.Lsm.commitSwap(fs, dir, "bloom", 1L)
+    assert(BloomSidecar.stats(spark, dir).get.inserted == -1L)
+    BloomSidecar.rebuild(spark, dir, (0L until 10L).toDF("id"), "id", 2L,
+      minItems = 100L)
+    assert(storedBatch(dir) == 2L)
+    assert(BloomSidecar.stats(spark, dir).get == BloomSidecar.Stats(100L, 10L, 0.01))
   }
 }

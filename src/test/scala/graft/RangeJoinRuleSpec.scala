@@ -3,20 +3,14 @@ package graft
 import graft.plans.RangeJoinRewrite
 import org.apache.spark.sql.functions._
 
-/** The SQL-facing range-join rewrite: same session, rule attached via
-  * experimental.extraOptimizations (the live-session injection point;
-  * GraftExtensions wires the identical rule through spark.sql.extensions). */
+/** The SQL-facing range-join rewrite, as the shared session's
+  * GraftExtensions install it. */
 class RangeJoinRuleSpec extends SparkSpec {
   import spark.implicits._
 
   private def withRule[A](width: Long)(f: => A): A = {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ RangeJoinRewrite
     spark.conf.set(RangeJoinRewrite.WidthConf, width.toString)
-    try f finally {
-      spark.conf.unset(RangeJoinRewrite.WidthConf)
-      spark.experimental.extraOptimizations = prev
-    }
+    try f finally spark.conf.unset(RangeJoinRewrite.WidthConf)
   }
 
   private def fixture(): Unit = {
@@ -75,14 +69,10 @@ class RangeJoinRuleSpec extends SparkSpec {
 
   test("rule off (no conf) leaves the plan untouched") {
     fixture()
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ RangeJoinRewrite
-    try {
-      val plan = spark.sql(
-        "SELECT pid, iid FROM pts JOIN ivs ON pts.t BETWEEN ivs.lo AND ivs.hi")
-        .queryExecution.optimizedPlan.toString
-      assert(!plan.contains("__graft_pbucket"))
-    } finally spark.experimental.extraOptimizations = prev
+    val plan = spark.sql(
+      "SELECT pid, iid FROM pts JOIN ivs ON pts.t BETWEEN ivs.lo AND ivs.hi")
+      .queryExecution.optimizedPlan.toString
+    assert(!plan.contains("__graft_pbucket"))
   }
 
   test("results match the operator form on the same data") {

@@ -1,27 +1,20 @@
 package graft
 
-import graft.plans.{TopKStrategy, TopKWindowRewrite}
+import graft.plans.TopKWindowRewrite
 import org.apache.spark.sql.DataFrame
 
 /** The opt-in top-N-per-group whole-operator rewrite: logical node +
-  * planner strategy + bounded-heap partial/final execs, attached via the
-  * experimental injection points (GraftExtensions wires the same pair
-  * through spark.sql.extensions). */
+  * planner strategy + bounded-heap partial/final execs, as the shared
+  * session's GraftExtensions install them. */
 class TopKRuleSpec extends SparkSpec {
   import spark.implicits._
 
   private def withTopK[A](maxK: Option[Int] = None)(f: => A): A = {
-    val prevOpt = spark.experimental.extraOptimizations
-    val prevStr = spark.experimental.extraStrategies
-    spark.experimental.extraOptimizations = prevOpt :+ TopKWindowRewrite
-    spark.experimental.extraStrategies = prevStr :+ TopKStrategy
     spark.conf.set(TopKWindowRewrite.EnabledConf, "true")
     maxK.foreach(m => spark.conf.set(TopKWindowRewrite.MaxKConf, m.toString))
     try f finally {
       spark.conf.unset(TopKWindowRewrite.EnabledConf)
       spark.conf.unset(TopKWindowRewrite.MaxKConf)
-      spark.experimental.extraOptimizations = prevOpt
-      spark.experimental.extraStrategies = prevStr
     }
   }
 
