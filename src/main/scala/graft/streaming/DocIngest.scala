@@ -1,13 +1,10 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
-import org.apache.spark.util.sketch.BloomFilter
 
 /** Streaming document ingest with incremental near-dup gating — the
   * LLM-corpus counterpart of [[Ingest]]: a file-drop of JSONL document
@@ -78,18 +75,9 @@ object DocIngest {
     * batch tag. Within-batch rule: for every near-dup pair (a < b), b is
     * dropped — deterministic under replay and partitioning.
     *
-    * Lineage is cut at every gate frame: the collapsed batch and each
-    * gate's output are materialized behind a [[graft.util.Checkpoints.barrier]]
-    * as they are built, so every later query plans over a handful of
-    * small leaves instead of re-deriving (and re-analysing) the batch's
-    * whole gate history. Gates that do not run yield empty local frames.
-    * The barriers' blocks and the Bloom probe's broadcast are freed when
-    * the batch ends, failed or not.
-    *
-    * `phaseWalls` (operational telemetry, None in production): when set,
-    * each phase's wall seconds accumulate into the map under a stable
-    * phase key. Every barrier runs inside its phase, so the phase walls
-    * time the same jobs and plans that run untraced. */
+    * The collapsed batch and every gate frame are materialized as they
+    * are built and freed when the batch ends, failed or not; `phaseWalls`
+    * times the same jobs that run untraced ([[BatchScope]]). */
   def commitDocBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       corpusDir: String, indexPath: String, threshold: Double = 0.35,
       n: Int = 3, numHashes: Int = 64, bands: Int = 16,
@@ -105,24 +93,8 @@ object DocIngest {
       evalPath: Option[String] = None, decontamN: Int = 5,
       phaseWalls: Option[scala.collection.mutable.Map[String, Double]] = None)
       : BatchResult = {
-    val barriers = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var bloom: Option[Broadcast[BloomFilter]] = None
-    def cut(df: DataFrame): DataFrame = {
-      val m = graft.util.Checkpoints.barrier(df)
-      barriers += m
-      m
-    }
-    // a gate that does not run: no rows, no lineage, no job
-    def none(like: DataFrame): DataFrame =
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), like.schema)
-    def phase[T](name: String)(f: => T): T = phaseWalls match {
-      case Some(m) =>
-        val t0 = System.nanoTime()
-        val r = f
-        m(name) = m.getOrElse(name, 0.0) + (System.nanoTime() - t0) / 1e9
-        r
-      case None => f
-    }
+    val scope = new BatchScope(spark, batchId, phaseWalls)
+    import scope.{cut, none, phase}
     try {
       // id-sidecar entry: recovery + THIS batch's own-marker sweep. The
       // LSH tree has no committed-batch meta (replays always recompute,
@@ -179,42 +151,17 @@ object DocIngest {
         bandsPath.getFileSystem(spark.sessionState.newHadoopConf()), bandsPath)
       // Re-delivery gate (class scaladoc): a doc_id already admitted by an
       // EARLIER batch is dropped before the near-dup probe even runs — the
-      // probe's self-id filter must never re-admit it. The current batch's
-      // own subdirectory is excluded via the file-path metadata column so a
-      // replayed batch doesn't anti-join its first attempt away.
-      // Bloom-sidecar fast path: bloom-negative ids are definitely novel
-      // (the sidecar folds before every index append), so the stored
-      // `sizes/` id scan runs only when a positive exists — an all-novel
-      // batch never touches it. The sidecar may contain a replayed batch's
-      // own first-attempt ids; the exact scan's own-batch-dir exclusion
-      // still decides those correctly.
+      // probe's self-id filter must never re-admit it. On a legacy tree the
+      // current batch's own subdirectory is excluded via the file-path
+      // metadata column so a replayed batch doesn't anti-join its first
+      // attempt away.
       def storedDocIds = spark.read.option("recursiveFileLookup", "true")
         .parquet(s"$indexPath/sizes")
         .select(col("doc_id"), col("_metadata.file_path").as("fp"))
         .filter(!col("fp").contains(s"/batch-$batchId/"))
         .select("doc_id").distinct()
-      // Positive verification rides the bucketed id sidecar when present:
-      // the scan is partition-pruned to the positives' hash buckets (and
-      // the entry sweep above removed this batch's own first-attempt ids,
-      // so no own-batch-dir exclusion is needed on this path). Legacy
-      // trees keep the sizes/ scan with its file-path exclusion.
-      val redelivered = phase("gate_redelivery") {
-        if (!indexExists) noIds
-        else graft.util.BloomSidecar.read(spark, indexPath) match {
-          case Some(bits) =>
-            val filter = graft.util.BloomSidecar.broadcast(spark, bits)
-            bloom = Some(filter)
-            val positives = b
-              .filter(graft.util.BloomSidecar.probe(filter, col("doc_id")))
-              .select("doc_id").distinct()
-            if (positives.isEmpty) noIds
-            else if (graft.util.IdTree.exists(spark, indexPath))
-              cut(graft.util.IdTree.verify(spark, indexPath, positives, "doc_id"))
-            else cut(positives.join(storedDocIds, Seq("doc_id"), "left_semi"))
-          case None => cut(b.join(storedDocIds, Seq("doc_id"), "left_semi")
-            .select("doc_id").distinct())
-        }
-      }
+      val redelivered = phase("gate_redelivery")(
+        scope.redeliveredIds(b, indexPath, "doc_id", indexExists, storedDocIds))
       val (indexPairs, indexDrops) = phase("gate_text") {
         if (!indexExists) (none(withinPairs), noIds)
         else {
@@ -250,42 +197,10 @@ object DocIngest {
       })
       val (embWithinPairs, embIndexPairs) = phase("gate_vector")(embFrame match {
         case Some((p, vecs)) =>
-          val fs = graft.util.Lsm.fs(spark, p)
-          // retrain-aware entry recovery (raw recoverSwap("centroids")
-          // would sweep a crashed post-marker retrain's staged twin),
-          // then the shared entry: a committed retry keeps its marked
-          // files, an uncommitted one sweeps its own partial move before
-          // the gate probes the tree
-          graft.operators.Similarity.recoverIvfTree(spark, p)
-          val entry = graft.util.Lsm.enterBatch(spark, fs, p, batchId)
-          // versioned-root resolution for the whole gate; an uncommitted
-          // retry sweeps its own partial move at the RESOLVED root
-          val vroot = graft.operators.Similarity.ivfRoot(spark, p)
-          if (!entry.alreadyCommitted)
-            graft.util.Lsm.sweepMarked(fs,
-              new org.apache.hadoop.fs.Path(s"$vroot/vectors"), s"b$batchId-")
-          if (!fs.exists(new org.apache.hadoop.fs.Path(s"$vroot/centroids"))) {
-            graft.operators.Similarity.ivfCentroids(vecs, embNlist, embDim)
-              .write.mode("overwrite")
-              .parquet(graft.util.Lsm.stagedPath(p, "centroids", batchId))
-            graft.util.Lsm.commitSwap(fs, p, "centroids", batchId)
-          }
-          val cents = spark.read.parquet(s"$vroot/centroids")
-          val probes = cut(
-            graft.operators.Similarity.ivfProbes(vecs, cents, embNprobe))
-          val w = cut(graft.operators.Similarity
-            .embNearDupWithin(probes, embThreshold)
-            .select(col("a_id"), col("b_id")))
-          // DATA-file probe, not dir existence (the crashed-first-fold
-          // sweep leaves empty cid= dirs that would wedge a bare read)
-          val i =
-            if (graft.util.Lsm.hasBucketData(fs,
-                new org.apache.hadoop.fs.Path(s"$vroot/vectors")))
-              cut(graft.operators.Similarity
-                .embNearDupAgainstIndex(spark, p, probes, embThreshold)
-                .select(col("a_id"), col("b_id")))
-            else none(w)
-          (w, i)
+          // a committed retry keeps its marked files (its fold no-ops)
+          val (_, vroot) = scope.enterIvfTree(p)
+          scope.trainIfCold(p, vroot, vecs, embNlist, embDim)
+          scope.cosinePairs(p, vroot, vecs, embThreshold, embNprobe)
         case None => (none(withinPairs), none(withinPairs))
       })
       // without a vector gate the text drops are the whole answer
@@ -316,33 +231,19 @@ object DocIngest {
       }
       phase("corpus_write")(
         admitted.write.mode("overwrite").parquet(s"$corpusDir/batch-$batchId"))
-      // sidecar folds BEFORE the index append (the BloomSidecar ordering
-      // contract: a crash after this leaves a harmless superset)
-      phase("sidecar_fold")(graft.util.BloomSidecar.fold(spark, indexPath,
-        admitted.select("doc_id"), "doc_id", batchId,
-        storedIds = if (indexExists) storedDocIds else noIds))
-      // id sidecar folds under the same pre-commit rule (here the commit
-      // point is the stream checkpoint; the entry sweep restores
-      // exactness on replay) — a legacy tree adopts it from the sizes/
-      // scan, the one-time bootstrap pass
-      phase("sidecar_fold")(graft.util.IdTree.fold(spark, indexPath,
-        admitted.select("doc_id"), "doc_id", batchId,
-        storedIds = if (indexExists) storedDocIds else noIds))
+      // sidecars fold BEFORE the index append (here the commit point is
+      // the stream checkpoint); a legacy tree adopts them from the sizes/
+      // scan
+      phase("sidecar_fold")(scope.foldSidecars(indexPath, admitted, "doc_id",
+        indexExists, storedDocIds))
       phase("fold_lsh")(Dedup.appendToLshIndex(admitted, indexPath,
         s"batch-$batchId", n, numHashes, bands, gramHashes, bandBucket))
-      // saturation repair for the LSH tree's sidecar at compaction cadence
-      // (the EmbIngest pattern — without it the filter silently saturates
-      // past its fixed capacity and the gate degrades to scan-always).
-      // Rebuilt AFTER the append so the fresh filter covers this batch;
-      // the full sizes/ scan is the price of fresh headroom, paid at
-      // compaction cadence only once the filter is past half fill.
+      // saturation repair at compaction cadence, AFTER the append so the
+      // fresh filter covers this batch
       if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-        phase("maintenance")(graft.util.BloomSidecar.rebuild(spark, indexPath,
-          if (graft.util.IdTree.exists(spark, indexPath))
-            graft.util.IdTree.readAll(spark, indexPath, "doc_id")
-          else spark.read.option("recursiveFileLookup", "true")
-            .parquet(s"$indexPath/sizes").select("doc_id"),
-          "doc_id", batchId))
+        phase("maintenance")(scope.rebuildBloom(indexPath, "doc_id",
+          spark.read.option("recursiveFileLookup", "true")
+            .parquet(s"$indexPath/sizes").select("doc_id")))
       // Served-retrieval maintenance (the q199 shape as the ACTUAL daemon
       // path): fold the admitted docs into the at-rest BM25 index. The
       // fold is the staged two-phase commit keyed by this batch id, so the
@@ -422,13 +323,7 @@ object DocIngest {
         s"dropped_redelivered=${r.droppedRedelivered} " +
         s"dropped_contaminated=${r.droppedContaminated}")
       r
-    } finally {
-      // also on a mid-batch failure: the streaming engine retries the
-      // batch, and leaked blocks would accumulate in the block manager
-      // for the daemon's lifetime
-      barriers.foreach(DatasetBridge.releaseBarrier)
-      bloom.foreach(_.destroy())
-    }
+    } finally scope.close()
   }
 
   /** Read the admitted corpus back (all batch directories). */

@@ -74,99 +74,49 @@ object EmbIngest {
       pqIndexPath: Option[String] = None, pqM: Int = 8, pqKsub: Int = 16,
       pqResidual: Boolean = true,
       maxNlist: Int = 4096): DocIngest.BatchResult = {
-    val fs = Lsm.fs(spark, indexPath)
-    // retrain-aware entry recovery (a raw recoverSwap("centroids") here
-    // would sweep a crashed post-marker retrain's staged twin as debris),
-    // then the shared entry: committed no-op, or sweep this batch's own
-    // partial move BEFORE the gate probes the tree (ivfInsert re-sweeps;
-    // harmless)
-    Similarity.recoverIvfTree(spark, indexPath)
-    if (Lsm.enterBatch(spark, fs, indexPath, batchId).alreadyCommitted) {
+    val scope = new BatchScope(spark, batchId)
+    import scope.{cut, none}
+    // committed no-op, or sweep this batch's own partial move BEFORE the
+    // gate probes the tree (ivfInsert re-sweeps; harmless)
+    val (committed, root) = scope.enterIvfTree(indexPath)
+    if (committed) {
       System.err.println(s"[embingest] batch $batchId: already committed")
       return DocIngest.BatchResult(0, 0, 0, 0)
     }
-    // versioned-root resolution, once for the whole batch (single writer:
-    // no retrain can race it); this batch's own crashed partial move
-    // sweeps at the RESOLVED root before the gate probes the tree
-    val root = Similarity.ivfRoot(spark, indexPath)
-    Lsm.sweepMarked(fs, new Path(s"$root/vectors"), s"b$batchId-")
     // id-sidecar entry (recovery + own-marker sweep) — lives at the tree
     // top, not the version root: the admitted-id SET is retrain-invariant
     graft.util.IdTree.enterBatch(spark, indexPath, batchId)
-    val uniq = batch.groupBy("vec_id")
-      .agg(min(col("embedding")).as("embedding")).persist()
-    val cached = scala.collection.mutable.ArrayBuffer[DataFrame](uniq)
-    // storageLevel guard: two gates can hand back plan-identical frames
-    // (the limit(0) placeholders), and a second persist() of an already-
-    // cached plan noisy-warns the daemon's logs every batch
-    def cache(df: DataFrame): DataFrame = {
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        cached += df.persist()
-      df
-    }
     try {
-      // materialize the cache before train + gate fan out on it — and guard
-      // the empty drop: training on zero vectors would swap-commit an EMPTY
-      // centroid table, after which every later batch assigns against
-      // nothing and silently folds zero rows forever
+      val uniq = cut(batch.groupBy("vec_id")
+        .agg(min(col("embedding")).as("embedding")))
+      // an empty drop must not train (see BatchScope.trainIfCold)
       if (uniq.count() == 0L) {
         System.err.println(s"[embingest] batch $batchId: empty drop, skipped")
         return DocIngest.BatchResult(0, 0, 0, 0)
       }
-      // cold-start training applies only to a fresh tree, where the
-      // resolved root IS indexPath
-      if (!fs.exists(new Path(s"$root/centroids"))) {
-        Similarity.ivfCentroids(uniq, nlist, dim).write.mode("overwrite")
-          .parquet(Lsm.stagedPath(indexPath, "centroids", batchId))
-        Lsm.commitSwap(fs, indexPath, "centroids", batchId)
-      }
+      scope.trainIfCold(indexPath, root, uniq, nlist, dim)
       // DATA-file probe, not dir existence: a crashed first fold's sweep
       // leaves empty cid= dirs behind, and a bare-dir read would throw
       // "unable to infer schema" on every retry, wedging the daemon
-      val indexExists = Lsm.hasBucketData(fs, new Path(s"$root/vectors"))
+      val indexExists = Lsm.hasBucketData(Lsm.fs(spark, indexPath),
+        new Path(s"$root/vectors"))
       def storedIds = spark.read.parquet(s"$root/vectors")
         .select(col("vec_id")).distinct()
-      val emptyIds = uniq.select("vec_id").limit(0)
-      // Re-delivery gate through the Bloom sidecar: bloom-negative ids are
-      // definitely novel (the sidecar commits before every tree fold, so
-      // it can never miss a stored id), and positives verify against the
-      // bucketed id sidecar — ONLY the buckets the positives hash to are
-      // read (partition-pruned), never the tree's full id column: the
-      // r13-measured O(corpus)-per-batch verify curve, bounded. A
-      // sidecar-less (legacy) tree falls back to the full scan and adopts
-      // both sidecars at this batch's fold.
-      val redelivered = cache(if (!indexExists) emptyIds
-        else graft.util.BloomSidecar.read(spark, indexPath) match {
-          case Some(bits) =>
-            val positives = uniq
-              .filter(graft.util.BloomSidecar.probe(bits, col("vec_id")))
-              .select("vec_id")
-            if (positives.isEmpty) emptyIds
-            else if (graft.util.IdTree.exists(spark, indexPath))
-              graft.util.IdTree.verify(spark, indexPath, positives, "vec_id")
-            else positives.join(storedIds, Seq("vec_id"), "left_semi")
-          case None => uniq.join(storedIds, Seq("vec_id"), "left_semi")
-            .select("vec_id")
-        })
+      val redelivered = scope.redeliveredIds(uniq, indexPath, "vec_id",
+        indexExists, storedIds)
       val (withinDrops, indexDrops) = dedupThreshold match {
         case Some(t) =>
-          val centroids = spark.read.parquet(s"$root/centroids")
-          val probes = cache(Similarity.ivfProbes(uniq, centroids, nprobe))
-          val w = cache(Similarity.embNearDupWithin(probes, t)
-            .select(col("b_id").as("vec_id")).distinct())
-          val i = cache(if (indexExists)
-            Similarity.embNearDupAgainstIndex(spark, indexPath, probes, t)
-              .select(col("a_id").as("vec_id")).distinct()
-          else w.limit(0))
-          (w, i)
+          val (w, i) = scope.cosinePairs(indexPath, root, uniq, t, nprobe)
+          (cut(w.select(col("b_id").as("vec_id")).distinct()),
+            cut(i.select(col("a_id").as("vec_id")).distinct()))
         case None =>
-          val empty = cache(uniq.select("vec_id").limit(0))
-          (empty, empty)
+          val noIds = none(uniq.select("vec_id"))
+          (noIds, noIds)
       }
-      val admitted = cache(uniq.join(
+      val admitted = cut(uniq.join(
         withinDrops.union(indexDrops).union(redelivered).distinct(),
         Seq("vec_id"), "left_anti"))
-      val nAdmitted = admitted.count() // materialize before the fold reuses it
+      val nAdmitted = admitted.count()
       // Compressed twin folds FIRST (SCALING deferred #10 closed): the
       // gate above reads only the uncompressed tree, so "IVF meta
       // committed" must imply "PQ fold committed" for the entry's
@@ -176,19 +126,10 @@ object EmbIngest {
       // a redone IVF fold. The PQ quantizer cold-trains on the whole
       // deduplicated drop (the uncompressed tree's centroid contract) but
       // folds only the admitted set, under the SAME batch id.
-      // sidecar folds FIRST of all (the BloomSidecar ordering contract:
-      // a crash after this leaves it a harmless superset; the reverse
-      // order could admit a duplicate on a later re-delivery)
-      graft.util.BloomSidecar.fold(spark, indexPath,
-        admitted.select("vec_id"), "vec_id", batchId,
-        storedIds = if (indexExists) storedIds else emptyIds)
-      // id sidecar folds under the same pre-commit rule ([[graft.util
-      // .IdTree]] contract: fold before the meta marker, sweep at entry);
-      // a legacy tree bootstraps from the full id scan here — the one-time
-      // adoption pass
-      graft.util.IdTree.fold(spark, indexPath, admitted.select("vec_id"),
-        "vec_id", batchId,
-        storedIds = if (indexExists) storedIds else emptyIds)
+      // sidecars fold FIRST of all, before the meta marker (the
+      // BloomSidecar ordering contract); a legacy tree bootstraps them from
+      // the full id scan here
+      scope.foldSidecars(indexPath, admitted, "vec_id", indexExists, storedIds)
       pqIndexPath.foreach { p =>
         graft.operators.Pq.ivfPqCommitBatch(spark, p, admitted, batchId,
           nlist = nlist, m = pqM, ksub = pqKsub, dim = dim,
@@ -201,14 +142,7 @@ object EmbIngest {
         // id-sidecar fragments merge in the same slot (this batch's meta
         // committed just above, so batchId is a safe sweep bound)
         graft.util.IdTree.compact(spark, indexPath, batchId)
-        // saturation repair at the same cadence: re-create the bloom with
-        // fresh headroom — from the compacted single-column id sidecar
-        // when present (strictly cheaper than the tree's id scan)
-        graft.util.BloomSidecar.rebuild(spark, indexPath,
-          if (graft.util.IdTree.exists(spark, indexPath))
-            graft.util.IdTree.readAll(spark, indexPath, "vec_id")
-          else storedIds,
-          "vec_id", batchId)
+        scope.rebuildBloom(indexPath, "vec_id", storedIds)
       }
       // periodic drift repair in the same single-writer slot: retrain the
       // coarse quantizer on everything served and re-assign (the fold's
@@ -249,7 +183,7 @@ object EmbIngest {
         s"dropped_vs_index=${r.droppedVsIndex} " +
         s"dropped_redelivered=${r.droppedRedelivered}")
       r
-    } finally cached.foreach(_.unpersist())
+    } finally scope.close()
   }
 
   /** Start the streaming fold: JSONL drops -> per-batch gated commit.

@@ -47,12 +47,13 @@ object MediaIngest {
     * of a stored hash), write admitted payloads to
     * `corpusDir/batch-<id>`, fold admitted hashes into `indexPath`.
     * The meta marker commits last, so the index fold is the idempotence
-    * point; the corpus write is overwrite-idempotent per batch dir. */
-  /** `phaseWalls` (operational telemetry, None in production): the
-    * [[DocIngest.commitDocBatch]] contract — each phase is forced at its
-    * boundary (a count() on the already-cached frame) and its wall
-    * seconds accumulate under a stable key, so a soak can attribute
-    * per-batch wall to decode vs gate vs write vs fold by measurement. */
+    * point; the corpus write is overwrite-idempotent per batch dir.
+    *
+    * `phaseWalls` (operational telemetry, None in production): each
+    * phase's wall seconds accumulate under a stable key, so a soak can
+    * attribute per-batch wall to decode vs gate vs write vs fold. Every
+    * frame a phase builds is materialized inside it ([[BatchScope]]), so
+    * the phases time the same jobs that run untraced. */
   def commitMediaBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       corpusDir: String, indexPath: String, maxDist: Int = 6,
       nBuckets: Int = 8, compactEvery: Int = 0,
@@ -71,79 +72,40 @@ object MediaIngest {
     // id-sidecar entry (recovery + own-marker sweep) alongside the chunk
     // tree's sweep, BEFORE the gate probes it
     graft.util.IdTree.enterBatch(spark, indexPath, batchId)
-    // duplicate doc_id rows collapse deterministically (min payload) BEFORE
-    // anything else — the EmbIngest producer-retry rule: the hash gate
-    // already collapsed per id, but the payload write joined the RAW batch,
-    // so a duplicated line wrote the same doc twice into the corpus while
-    // the index served it once (caught by MediaSoak's served==rebuild
-    // checkpoint, r13)
-    val b = batch.groupBy("doc_id")
-      .agg(min(col("payload")).as("payload")).persist()
-    val cached = scala.collection.mutable.ArrayBuffer[DataFrame](b)
-    // storageLevel guard: plan-identical frames (the limit(0)
-    // placeholders) must not re-persist and warn every batch
-    def cache(df: DataFrame): DataFrame = {
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        cached += df.persist()
-      df
-    }
-    def phase[T](name: String)(f: => T): T = phaseWalls match {
-      case Some(m) =>
-        val t0 = System.nanoTime()
-        val r = f
-        m(name) = m.getOrElse(name, 0.0) + (System.nanoTime() - t0) / 1e9
-        r
-      case None => f
-    }
-    def settle(df: DataFrame): Unit =
-      if (phaseWalls.isDefined) { df.count(); () }
+    val scope = new BatchScope(spark, batchId, phaseWalls)
+    import scope.{cut, none, phase}
     try {
-      // one row per doc_id by the entry collapse above, so the hash frame
-      // needs no further per-id aggregation
-      val hashes = cache(Multimodal.imageHashes(spark, b).toDF()
-        .select("doc_id", "ahash"))
-      phase("decode_hash")(settle(hashes))
+      // duplicate doc_id rows collapse deterministically (min payload)
+      // BEFORE anything else — the EmbIngest producer-retry rule: the hash
+      // gate already collapsed per id, but the payload write joined the RAW
+      // batch, so a duplicated line wrote the same doc twice into the
+      // corpus while the index served it once (caught by MediaSoak's
+      // served==rebuild checkpoint, r13). One row per doc_id from here on,
+      // so the hash frame needs no further per-id aggregation.
+      val (b, hashes) = phase("decode_hash") {
+        val b = cut(batch.groupBy("doc_id").agg(min(col("payload")).as("payload")))
+        (b, cut(Multimodal.imageHashes(spark, b).toDF().select("doc_id", "ahash")))
+      }
       // DATA-file probe, not dir existence: a crashed first fold's sweep
       // leaves empty tb= dirs behind, and a bare-dir read would throw on
       // every retry, wedging the daemon
       val indexExists = Lsm.hasBucketData(fs, new Path(s"$indexPath/chunks"))
       def storedIds = Multimodal.servedHashes(spark, indexPath)
         .select("doc_id").distinct()
-      val emptyIds = hashes.select("doc_id").limit(0)
-      // Bloom-sidecar fast path for the exact re-delivery gate; positives
-      // verify against the bucketed id sidecar (partition-pruned to the
-      // positives' hash buckets) instead of the full served-id scan —
-      // legacy trees fall back to the scan and adopt the sidecar at fold
-      val redelivered = phase("gate_redelivery") {
-        val df = cache(if (!indexExists) emptyIds
-          else graft.util.BloomSidecar.read(spark, indexPath) match {
-            case Some(bits) =>
-              val positives = hashes
-                .filter(graft.util.BloomSidecar.probe(bits, col("doc_id")))
-                .select("doc_id")
-              if (positives.isEmpty) emptyIds
-              else if (graft.util.IdTree.exists(spark, indexPath))
-                graft.util.IdTree.verify(spark, indexPath, positives, "doc_id")
-              else positives.join(storedIds, Seq("doc_id"), "left_semi")
-            case None => hashes.join(storedIds, Seq("doc_id"), "left_semi")
-              .select("doc_id")
-          })
-        settle(df); df
-      }
+      val redelivered = phase("gate_redelivery")(scope.redeliveredIds(hashes,
+        indexPath, "doc_id", indexExists, storedIds))
       val (withinDrops, indexDrops) = phase("gate_neardup") {
-        val w = cache(Multimodal.imageNearDupPairs(hashes, maxDist)
+        val w = cut(Multimodal.imageNearDupPairs(hashes, maxDist)
           .select(col("b_id").as("doc_id")).distinct())
-        val i = cache(if (indexExists)
-          Multimodal.imageNearDupAgainstIndex(spark, indexPath, hashes, maxDist)
-            .select(col("a_id").as("doc_id")).distinct()
-        else w.limit(0))
-        settle(w); settle(i)
+        val i = if (indexExists)
+          cut(Multimodal.imageNearDupAgainstIndex(spark, indexPath, hashes, maxDist)
+            .select(col("a_id").as("doc_id")).distinct())
+        else none(w)
         (w, i)
       }
-      val admittedIds = cache(hashes.select("doc_id").join(
+      val admittedIds = phase("admit")(cut(hashes.select("doc_id").join(
         withinDrops.union(indexDrops).union(redelivered).distinct(),
-        Seq("doc_id"), "left_anti"))
-      phase("admit")(settle(admittedIds))
+        Seq("doc_id"), "left_anti")))
       // payloads of admitted ids, written where they already live — the
       // join is id-against-id; the binary column never shuffles
       phase("corpus_write") {
@@ -152,7 +114,7 @@ object MediaIngest {
         admitted.write.mode("overwrite").parquet(batchDir)
         // persist LOGICAL payload stats next to the batch (r16 ask #3):
         // the daemon knows bytes/rows here for the cost of one agg over
-        // the cached batch, so readCorpus never has to re-derive them
+        // the materialized batch, so readCorpus never has to re-derive them
         // from a full corpus listing + footer count. Logical (in-memory)
         // bytes, not on-disk: compressible payloads can be far smaller
         // on disk than in the reader's column buffers (r15 ADVICE), and
@@ -163,28 +125,17 @@ object MediaIngest {
         writePayloadStats(spark, batchDir, admitted)
       }
       val admittedHashes = hashes.join(admittedIds, Seq("doc_id"), "left_semi")
-      // sidecar folds BEFORE the index fold (BloomSidecar ordering
-      // contract); the id sidecar folds under the same pre-commit rule
-      phase("sidecar_fold") {
-        graft.util.BloomSidecar.fold(spark, indexPath, admittedIds, "doc_id",
-          batchId, storedIds = if (indexExists) storedIds else emptyIds)
-        graft.util.IdTree.fold(spark, indexPath, admittedIds, "doc_id",
-          batchId, storedIds = if (indexExists) storedIds else emptyIds)
-      }
+      // sidecars fold BEFORE the index fold (BloomSidecar ordering
+      // contract)
+      phase("sidecar_fold")(scope.foldSidecars(indexPath, admittedIds, "doc_id",
+        indexExists, storedIds))
       phase("fold_chunks")(Multimodal.hashIndexInsert(spark, indexPath,
         admittedHashes, batchId, maxDist, nBuckets))
       if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
         phase("maintenance") {
           Multimodal.hashIndexCompact(spark, indexPath)
           graft.util.IdTree.compact(spark, indexPath, batchId)
-          // sidecar saturation repair at the same cadence (the EmbIngest
-          // pattern): fresh ≥2x headroom from the compacted id sidecar
-          // (single column) when present, else the tree's served-id scan
-          graft.util.BloomSidecar.rebuild(spark, indexPath,
-            if (graft.util.IdTree.exists(spark, indexPath))
-              graft.util.IdTree.readAll(spark, indexPath, "doc_id")
-            else Multimodal.servedHashes(spark, indexPath).select("doc_id"),
-            "doc_id", batchId)
+          scope.rebuildBloom(indexPath, "doc_id", storedIds)
         }
       val r = DocIngest.BatchResult(admittedIds.count(), withinDrops.count(),
         indexDrops.count(), redelivered.count())
@@ -193,7 +144,7 @@ object MediaIngest {
         s"dropped_vs_index=${r.droppedVsIndex} " +
         s"dropped_redelivered=${r.droppedRedelivered}")
       r
-    } finally cached.foreach(_.unpersist())
+    } finally scope.close()
   }
 
   /** Read the admitted media corpus back (all batch directories),
@@ -222,7 +173,7 @@ object MediaIngest {
 
   /** Write the batch's logical payload stats (row count + sum of payload
     * byte lengths) as a tiny JSON sidecar inside the batch directory.
-    * One agg job over the (cached) admitted frame — batch-sized work on
+    * One agg job over the admitted frame — batch-sized work on
     * the write path buys the read path out of a corpus-wide listing. */
   private[graft] def writePayloadStats(spark: SparkSession, batchDir: String,
       admitted: DataFrame): Unit = {

@@ -64,6 +64,17 @@ object Soak {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.GraftSession(s"local[$cpus]", cpus)
     val root = java.nio.file.Files.createTempDirectory(s"graft_soak_$mode").toString
+    // the run's corpus, indexes and rebuild copies go with the run, also
+    // when a checkpoint diverges
+    try run(spark, root, mode, args)
+    finally {
+      spark.stop()
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
+    }
+  }
+
+  private def run(spark: SparkSession, root: String, mode: String,
+      args: Array[String]): Unit = {
     val (defaultBatches, defaultPerBatch) =
       Map("doc" -> (200, 40), "emb" -> (60, 1000), "media" -> (100, 40))(mode)
     val nBatches = args.lift(1).map(_.toInt).getOrElse(defaultBatches)
@@ -114,7 +125,6 @@ object Soak {
     }.mkString("{", ",", "}")
     println(s"""SOAK_PHASES $perPhase""")
     daemon.finish()
-    spark.stop()
   }
 
   /** Largest data-file count in any `prefix*` bucket directory under

@@ -73,11 +73,6 @@ object BloomSidecar {
     udf((id: Long) => filter.value.mightContainLong(id))
       .withName("bloom_might_contain")(key.cast("long"))
 
-  /** [[probe]] over a broadcast of `filterBytes` that the ContextCleaner
-    * reclaims (see [[broadcast]]). */
-  def probe(filterBytes: Array[Byte], key: Column): Column =
-    probe(broadcast(SparkSession.active, filterBytes), key)
-
   /** The stored sidecar row after crash recovery, or None when the tree
     * has no sidecar. */
   private def storedRow(spark: SparkSession, treePath: String): Option[Row] = {

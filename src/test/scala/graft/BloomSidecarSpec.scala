@@ -24,7 +24,8 @@ class BloomSidecarSpec extends SparkSpec {
       storedIds = Seq.empty[Long].toDF("id"))
     val bits = BloomSidecar.read(spark, dir).get
     val probed = (0L until 100L).union(10000L until 10100L).toDF("id")
-      .select(col("id"), BloomSidecar.probe(bits, col("id")).as("hit"))
+      .select(col("id"), BloomSidecar.probe(
+          BloomSidecar.broadcast(spark, bits), col("id")).as("hit"))
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert((0L until 100L).forall(probed(_)), "no false negatives, ever")
     val falsePos = (10000L until 10100L).count(probed(_))
@@ -40,7 +41,8 @@ class BloomSidecarSpec extends SparkSpec {
     BloomSidecar.fold(spark, dir, (50L until 80L).toDF("id"), "id", 1L, empty)
     val bits = BloomSidecar.read(spark, dir).get
     val hits = (0L until 80L).toDF("id")
-      .filter(BloomSidecar.probe(bits, col("id"))).count()
+      .filter(BloomSidecar.probe(
+          BloomSidecar.broadcast(spark, bits), col("id"))).count()
     assert(hits == 80L)
   }
 
@@ -89,7 +91,8 @@ class BloomSidecarSpec extends SparkSpec {
     // (which the sidecar never saw folded) MUST be positive
     val bits = BloomSidecar.read(spark, idx).get
     val hits = (0L until 24L).toDF("id")
-      .filter(BloomSidecar.probe(bits, col("id"))).count()
+      .filter(BloomSidecar.probe(
+          BloomSidecar.broadcast(spark, bits), col("id"))).count()
     assert(hits == 24L, "bootstrap must cover pre-sidecar stored ids")
   }
 
@@ -106,7 +109,8 @@ class BloomSidecarSpec extends SparkSpec {
     assert(s.fill == 0.5)
     val bits = BloomSidecar.read(spark, dir).get
     assert((0L until 410L).toDF("id")
-      .filter(BloomSidecar.probe(bits, col("id"))).count() == 410L,
+      .filter(BloomSidecar.probe(
+          BloomSidecar.broadcast(spark, bits), col("id"))).count() == 410L,
       "adoption still covers every stored id")
   }
 
@@ -129,7 +133,8 @@ class BloomSidecarSpec extends SparkSpec {
     assert(s2.inserted == 150L && s2.fill > 1.0, s"must read saturated: $s2")
     val bits = BloomSidecar.read(spark, dir).get
     assert((0L until 150L).toDF("id")
-      .filter(BloomSidecar.probe(bits, col("id"))).count() == 150L,
+      .filter(BloomSidecar.probe(
+          BloomSidecar.broadcast(spark, bits), col("id"))).count() == 150L,
       "saturation never causes a false negative")
     // rebuild resets the counter exactly and restores >=2x headroom
     BloomSidecar.rebuild(spark, dir, (0L until 150L).toDF("id"), "id", 3L,
@@ -174,7 +179,7 @@ class BloomSidecarSpec extends SparkSpec {
     val batch = vecsDf((0L until 6L) ++ (200L until 212L))
     val bits = BloomSidecar.read(spark, idx).get
     val positives = batch.select("vec_id")
-      .filter(BloomSidecar.probe(bits, col("vec_id")))
+      .filter(BloomSidecar.probe(BloomSidecar.broadcast(spark, bits), col("vec_id")))
     val nBuckets = spark.read.parquet(s"$idx/ids_meta")
       .collect()(0).getAs[Long]("n_buckets").toInt
     val probedBuckets = positives
@@ -260,7 +265,8 @@ class BloomSidecarSpec extends SparkSpec {
     assert(row == 1000L, "capacity = max(minItems, 2 x current ids)")
     val bits = BloomSidecar.read(spark, dir).get
     assert((0L until 500L).toDF("id")
-      .filter(BloomSidecar.probe(bits, col("id"))).count() == 500L)
+      .filter(BloomSidecar.probe(
+          BloomSidecar.broadcast(spark, bits), col("id"))).count() == 500L)
   }
 
   private def storedBatch(dir: String): Long =

@@ -189,29 +189,26 @@ class DocIngestSpec extends SparkSpec {
     Seq((900L, tE)).toDF("doc_id", "text").write.parquet(evalDir)
     DocIngest.commitDocBatch(spark, docsDf(0L -> tA, 3L -> tB), 0L,
       corpus, index, invIndexPath = Some(inv))
-    // ids only ever leave the set between snapshots when the context
-    // cleaner reclaims an earlier test's RDD, so a leak shows as an id
-    // present after the batch that was absent before it
-    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val before = persisted
     // every gate live: bloom-positive re-delivery, vs-index near-dup,
     // within-batch near-dup, contamination
-    val r1 = DocIngest.commitDocBatch(spark,
-      docsDf(0L -> tC, 2L -> tB, 6L -> tD, 7L -> tD, 8L -> tE), 1L,
-      corpus, index, invIndexPath = Some(inv), evalPath = Some(evalDir))
-    assert(r1 == DocIngest.BatchResult(1, 1, 1, 1, 1), s"r1=$r1")
-    assert((persisted -- before).isEmpty, s"leaked ${persisted -- before}")
+    val leaked = leakedBlocks {
+      val r1 = DocIngest.commitDocBatch(spark,
+        docsDf(0L -> tC, 2L -> tB, 6L -> tD, 7L -> tD, 8L -> tE), 1L,
+        corpus, index, invIndexPath = Some(inv), evalPath = Some(evalDir))
+      assert(r1 == DocIngest.BatchResult(1, 1, 1, 1, 1), s"r1=$r1")
+    }
+    assert(leaked.isEmpty, s"leaked $leaked")
     // fails after the gates, the admit and the corpus write: the stats
     // row is gone over live postings
     val fs = new org.apache.hadoop.fs.Path(inv)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$inv/stats"), true)
-    intercept[IllegalArgumentException] {
+    val leakedOnFailure = leakedBlocks(intercept[IllegalArgumentException] {
       DocIngest.commitDocBatch(spark, docsDf(3L -> tD, 9L -> tC), 2L,
         corpus, index, invIndexPath = Some(inv), evalPath = Some(evalDir))
-    }
+    })
     assert(corpusIds(corpus).contains(9L), "the failure must come after the gates")
-    assert((persisted -- before).isEmpty, s"leaked ${persisted -- before}")
+    assert(leakedOnFailure.isEmpty, s"leaked $leakedOnFailure")
   }
 
   test("plan size: no plan carries the Bloom filter, the corpus write reads the batch once") {
@@ -441,7 +438,8 @@ class DocIngestSpec extends SparkSpec {
     val fs = graft.util.Lsm.fs(spark, index)
     val bits = graft.util.BloomSidecar.read(spark, index).get
     val positives = b1.select("doc_id")
-      .filter(graft.util.BloomSidecar.probe(bits, col("doc_id")))
+      .filter(graft.util.BloomSidecar.probe(
+        graft.util.BloomSidecar.broadcast(spark, bits), col("doc_id")))
     val nBuckets = spark.read.parquet(s"$index/ids_meta")
       .collect()(0).getAs[Long]("n_buckets").toInt
     val probed = positives

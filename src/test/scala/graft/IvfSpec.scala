@@ -202,6 +202,37 @@ class IvfSpec extends SparkSpec {
       s"gate probe must reach PartitionFilters:\n$plan")
   }
 
+  test("EmbIngest: a batch frees every block it materialized, also when it fails midway") {
+    import graft.streaming.{DocIngest, EmbIngest}
+    val root = java.nio.file.Files.createTempDirectory("emb-free").toString
+    val (path, pq) = (s"$root/idx", s"$root/pq")
+    def commit(b: org.apache.spark.sql.DataFrame, id: Long, pqM: Int = 4) =
+      EmbIngest.commitEmbBatch(spark, path, b, id, nlist = 6, dim = 16,
+        dedupThreshold = Some(0.9999), pqIndexPath = Some(pq), pqM = pqM,
+        pqKsub = 8)
+    commit(vecs.take(36).toDF("vec_id", "embedding"), 0L)
+    // every gate live: bloom-positive re-delivery (5), vs-index near-dup
+    // (1000 copies 0), within-batch near-dups (1001, 1002 copy 40)
+    val byId = vecs.toMap
+    val leaked = leakedBlocks {
+      val r1 = commit((vecs.drop(36) ++ Seq(5L -> byId(5L), 1000L -> byId(0L),
+        1001L -> byId(40L), 1002L -> byId(40L))).toDF("vec_id", "embedding"), 1L)
+      assert(r1 == DocIngest.BatchResult(12, 2, 1, 1), s"r1=$r1")
+    }
+    assert(leaked.isEmpty, s"leaked $leaked")
+    // fails at the PQ fold, after the gates and the sidecar folds: the
+    // batch asks for another PQ encode family than the twin was built with
+    val novel = Array.tabulate(16)(d => math.cos(d * 1.7).toFloat)
+    val leakedOnFailure = leakedBlocks(intercept[IllegalArgumentException] {
+      commit(Seq(2000L -> novel, 7L -> byId(7L)).toDF("vec_id", "embedding"),
+        2L, pqM = 2)
+    })
+    assert(graft.util.IdTree.readAll(spark, path, "vec_id")
+      .filter(col("vec_id") === 2000L).count() == 1L,
+      "the failure must come after the gates")
+    assert(leakedOnFailure.isEmpty, s"leaked $leakedOnFailure")
+  }
+
   test("ivfRetrain: tree re-assigned against retrained centroids; marker carries last_batch") {
     val path = java.nio.file.Files.createTempDirectory("ivf-rt").toString + "/idx"
     Similarity.writeIvfIndex(emb.filter(col("vec_id") % 3 === 0), path,

@@ -215,6 +215,33 @@ class MediaIngestSpec extends SparkSpec {
     assert(served(idx).keySet == (1L to 5L).toSet)
   }
 
+  test("a batch frees every block it materialized, also when it fails midway") {
+    val tmp = java.nio.file.Files.createTempDirectory("media-free").toString
+    val corpus = s"$tmp/corpus"; val idx = s"$tmp/idx"
+    MediaIngest.commitMediaBatch(spark, batchDf((1L to 6L).map(i => i -> bmp(i))),
+      0L, corpus, idx)
+    // every gate live: bloom-positive re-delivery, vs-index and
+    // within-batch near-dups
+    val leaked = leakedBlocks {
+      val r1 = MediaIngest.commitMediaBatch(spark, batchDf(Seq(7L -> bmp(7),
+        3L -> bmp(3), 100L -> bmp(1), 101L -> bmp(7))), 1L, corpus, idx)
+      assert(r1 == DocIngest.BatchResult(1, 1, 1, 1), s"r1=$r1")
+    }
+    assert(leaked.isEmpty, s"leaked $leaked")
+    // fails at the corpus write, after the gates and the admit: the
+    // corpus root is a regular file
+    val blocker = java.nio.file.Files.createFile(
+      java.nio.file.Paths.get(s"$tmp/blocker")).toString
+    val phases = scala.collection.mutable.Map[String, Double]()
+    val leakedOnFailure = leakedBlocks(intercept[Exception] {
+      MediaIngest.commitMediaBatch(spark, batchDf(Seq(8L -> bmp(8),
+        4L -> bmp(4))), 2L, blocker, idx, phaseWalls = Some(phases))
+    })
+    assert(phases.contains("admit") && !phases.contains("sidecar_fold"),
+      s"the failure must come after the gates: ${phases.keySet}")
+    assert(leakedOnFailure.isEmpty, s"leaked $leakedOnFailure")
+  }
+
   test("streaming daemon: JSONL drops end-to-end with the hash gate") {
     import java.nio.file.{Files, Path => JPath}
     import java.util.Base64

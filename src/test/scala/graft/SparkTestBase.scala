@@ -12,4 +12,15 @@ object SparkTestBase {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
+
+  /** Ids of the persisted RDDs `f` left behind. Ids only leave the set
+    * while `f` runs when the context cleaner reclaims an earlier test's
+    * RDD, so a leak shows as an id present after `f` that was absent
+    * before it. */
+  def leakedBlocks(f: => Any): Set[Int] = {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    f
+    persisted -- before
+  }
 }
