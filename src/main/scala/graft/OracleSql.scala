@@ -32,7 +32,8 @@ object OracleSql {
   def fmt3(x: String): String =
     s"printf('%.3f', round(($x) * 1000.0e0) / 1000.0e0)"
 
-  /** Python-style positive fmod, mirroring Geo.posMod. */
+  /** Python-style positive fmod: the `%` of Geo.azimuthRem and
+    * Geo.vertexLonRem, folded by Geo.posMod. */
   private def mod360(x: String): String =
     s"(CASE WHEN ($x) % 360.0e0 < 0 THEN ($x) % 360.0e0 + 360.0e0 ELSE ($x) % 360.0e0 END)"
 
@@ -55,7 +56,8 @@ object OracleSql {
     s"(CASE WHEN length(trim($g)) = 6 THEN $lon6 ELSE $lon4 END)"
   }
 
-  /** Mirrors Geo.rxAzimuth(txLat,txLon,rxLat,rxLon) with column-name args. */
+  /** Mirrors Geo.posMod(Geo.azimuthRem(toLat,toLon,fromLat,fromLon)) with
+    * column-name args. */
   private def fwdAzimuth(toLat: String, toLon: String, fromLat: String,
       fromLon: String): String = {
     val dLam = s"(radians($toLon) - radians($fromLon))"

@@ -21,13 +21,11 @@ import org.apache.spark.sql.functions._
   */
 object Geo {
 
-  /** Positive modulus matching Python's `%` on doubles: result in [0, m).
-    * Written as (x fmod m) + m when negative — identical bit-level arithmetic
-    * in Spark (Java `%` = C fmod) and DuckDB (`fmod`). */
-  def posMod(x: Column, m: Double): Column = {
-    val r = x % lit(m)
+  /** The fold of a staged remainder `r = x % m` into [0, m), matching
+    * Python's `%` on doubles: (x fmod m) + m when negative. Identical
+    * bit-level arithmetic in Spark (Java `%` = C fmod) and DuckDB (`fmod`). */
+  def posMod(r: Column, m: Double): Column =
     when(r < 0, r + lit(m)).otherwise(r)
-  }
 
   private def ch(loc: Column, i: Int): Column = ascii(substring(loc, i, 1))
 
@@ -52,56 +50,69 @@ object Geo {
     when(length(l) === 6, lon6).otherwise(lon4)
   }
 
-  /** Great-circle forward azimuth at the receiver, rx -> tx, degrees [0, 360).
-    * Ref: wsprnet_azi_calc.py:103-106. All inputs in degrees. */
-  def rxAzimuth(txLat: Column, txLon: Column, rxLat: Column, rxLon: Column): Column = {
-    val phiTx = radians(txLat); val phiRx = radians(rxLat)
-    val dLam = radians(txLon) - radians(rxLon)
-    val y = sin(dLam) * cos(phiTx)
-    val x = cos(phiRx) * sin(phiTx) - sin(phiRx) * cos(phiTx) * cos(dLam)
-    posMod(degrees(atan2(y, x)), 360.0)
-  }
+  // The path math below takes each shared input as a column and builds
+  // one step on it; the caller stages each step's result as a column of
+  // its own, so every intermediate is computed once (see
+  // graft.operators.Enrich).
 
-  /** Great-circle forward azimuth at the transmitter, tx -> rx, degrees [0, 360).
-    * Ref: wsprnet_azi_calc.py:108-111 (same formula, endpoints swapped via
-    * negated delta-lambda). */
-  def txAzimuth(txLat: Column, txLon: Column, rxLat: Column, rxLon: Column): Column =
-    rxAzimuth(rxLat, rxLon, txLat, txLon)
-
-  /** Latitude of the great-circle path vertex (point nearest a pole), before
-    * the off-track fallback. Ref: wsprnet_azi_calc.py:116-122.
-    * Same-meridian pairs take the max-|lat| endpoint (ties -> tx, matching
-    * Python max(key=abs) first-wins, :118); otherwise Clairaut's formula with
-    * the >90 fold (:120-122). */
-  def vertexLatRaw(txLat: Column, txLon: Column, rxLat: Column, rxLon: Column,
-      rxAzi: Column): Column = {
-    val maxAbs = maxByAbs(txLat, rxLat)
-    val v0 = when(txLon === rxLon, maxAbs)
-      .otherwise(degrees(acos(sin(radians(rxAzi)) * cos(radians(rxLat)))))
-    when(v0 > 90.0, lit(180.0) - v0).otherwise(v0)
+  /** Great-circle forward azimuth at `from` towards `to`, in degrees, as the
+    * fmod remainder that [[posMod]] folds into [0, 360). The receiver's
+    * azimuth is `azimuthRem(tx, rx)`, the transmitter's `azimuthRem(rx, tx)`.
+    * Ref: wsprnet_azi_calc.py:103-111. All inputs in degrees. */
+  def azimuthRem(toLat: Column, toLon: Column, fromLat: Column,
+      fromLon: Column): Column = {
+    val phiTo = radians(toLat); val phiFrom = radians(fromLat)
+    val dLam = radians(toLon) - radians(fromLon)
+    val y = sin(dLam) * cos(phiTo)
+    val x = cos(phiFrom) * sin(phiTo) - sin(phiFrom) * cos(phiTo) * cos(dLam)
+    degrees(atan2(y, x)) % lit(360.0)
   }
 
   /** Python max([a, b], key=abs): first maximal element wins ties -> a on |a|==|b|. */
   def maxByAbs(a: Column, b: Column): Column =
     when(abs(a) >= abs(b), a).otherwise(b)
 
-  /** Full vertex (lat, lon) as a 2-field struct `vlat`,`vlon`, including the
-    * longitude wrap (:123-128) and the off-track endpoint fallback (:130-136). */
-  def vertex(txLat: Column, txLon: Column, rxLat: Column, rxLon: Column,
-      rxAzi: Column): Column = {
-    val vLat = vertexLatRaw(txLat, txLon, rxLat, rxLon, rxAzi)
-    val arc = degrees(acos(tan(radians(rxLat)) / tan(radians(vLat))))
-    val vLon0 = when(rxAzi < 180, posMod(rxLon + arc, 360.0))
-      .otherwise(posMod(rxLon - arc, 360.0))
-    val vLon1 = when(vLon0 > 180, -(lit(360.0) - vLon0)).otherwise(vLon0)
-    // Off-track (or NaN-longitude) => use the endpoint nearest a pole.
-    val offTrack = vLon1 < least(txLon, rxLon) || vLon1 > greatest(txLon, rxLon)
-    val maxAbs = maxByAbs(txLat, rxLat)
-    val fLat = when(offTrack, maxAbs).otherwise(vLat)
-    val fLon = when(offTrack, when(maxAbs === txLat, txLon).otherwise(rxLon))
-      .otherwise(vLon1)
-    struct(fLat.as("vlat"), fLon.as("vlon"))
-  }
+  /** Latitude of the great-circle path vertex (point nearest a pole), before
+    * the >90 fold. Same-meridian pairs take the max-|lat| endpoint (ties ->
+    * tx, matching Python max(key=abs) first-wins); otherwise Clairaut's
+    * formula. Ref: wsprnet_azi_calc.py:116-120. */
+  def vertexLat0(txLon: Column, rxLon: Column, rxLat: Column, rxAzi: Column,
+      maxAbs: Column): Column =
+    when(txLon === rxLon, maxAbs)
+      .otherwise(degrees(acos(sin(radians(rxAzi)) * cos(radians(rxLat)))))
+
+  /** The >90 fold of [[vertexLat0]]. Ref: wsprnet_azi_calc.py:121-122. */
+  def foldLat(v0: Column): Column =
+    when(v0 > 90.0, lit(180.0) - v0).otherwise(v0)
+
+  /** Longitude offset from the receiver to the vertex. Ref: wsprnet_azi_calc.py:123. */
+  def vertexArc(rxLat: Column, vLat: Column): Column =
+    degrees(acos(tan(radians(rxLat)) / tan(radians(vLat))))
+
+  /** Vertex longitude east or west of the receiver by its azimuth, as the
+    * fmod remainder [[posMod]] folds into [0, 360). Ref: wsprnet_azi_calc.py:124-126. */
+  def vertexLonRem(rxLon: Column, arc: Column, rxAzi: Column): Column =
+    when(rxAzi < 180, rxLon + arc).otherwise(rxLon - arc) % lit(360.0)
+
+  /** [0, 360) -> (-180, 180]. Ref: wsprnet_azi_calc.py:127-128. */
+  def signedLon(lon: Column): Column =
+    when(lon > 180, -(lit(360.0) - lon)).otherwise(lon)
+
+  /** The vertex longitude lies outside the endpoints' span, or is NaN, which
+    * both Spark and DuckDB order above every double. Ref: wsprnet_azi_calc.py:130. */
+  def offTrack(vLon: Column, txLon: Column, rxLon: Column): Column =
+    vLon < least(txLon, rxLon) || vLon > greatest(txLon, rxLon)
+
+  /** Vertex latitude with the off-track fallback to the endpoint nearest a
+    * pole. Ref: wsprnet_azi_calc.py:130-136. */
+  def vertexLat(offTrack: Column, maxAbs: Column, vLat: Column): Column =
+    when(offTrack, maxAbs).otherwise(vLat)
+
+  /** Vertex longitude with the off-track fallback to the longitude of the
+    * endpoint nearest a pole. Ref: wsprnet_azi_calc.py:130-136. */
+  def vertexLon(offTrack: Column, maxAbs: Column, txLat: Column, txLon: Column,
+      rxLon: Column, vLon: Column): Column =
+    when(offTrack, when(maxAbs === txLat, txLon).otherwise(rxLon)).otherwise(vLon)
 
   /** Frequency (MHz) -> wavelength band code. 18-entry map keyed by
     * trunc(10 * MHz), default 9999. Ref: wsprnet_azi_calc.py:55-75, :137-139.

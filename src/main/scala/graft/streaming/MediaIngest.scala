@@ -147,26 +147,6 @@ object MediaIngest {
     } finally scope.close()
   }
 
-  /** Read the admitted media corpus back (all batch directories),
-    * deriving the vectorized reader's row-batch size from the corpus's
-    * OWN payload stats — the r14 512×512 MediaSoak finding, enforced at
-    * the read site instead of documented in prose: the vectorized
-    * parquet reader sizes its column batches in ROWS
-    * (`spark.sql.parquet.columnarReaderBatchSize`, default 4096), so a
-    * corpus of ~1 MB binary payloads would ask each task for multi-GB
-    * contiguous buffers and OOM. Average row bytes come from the
-    * per-batch stats sidecars the daemon writes at commit time
-    * ([[corpusPayloadStats]] — logical payload bytes, one shallow
-    * listing, no data-file walk), falling back to on-disk sizes × a
-    * compression safety factor for legacy corpora; the conf is set to
-    * ~32 MB of payload per column batch, clamped to [16, 4096] (small
-    * payloads keep the stock batch size). Session-level conf by Spark's
-    * design — it is read at scan execution — so a mixed session reading
-    * this corpus and small-row tables pays at most smaller (never
-    * unsafe) batches on the latter. The daemon itself never re-reads
-    * stored payloads on the batch path (hashes are computed from the
-    * in-flight batch; the corpus is write-only there), so only
-    * rebuild/audit readers come through here. */
   /** Name of the per-batch payload-stats sidecar. Underscore-prefixed so
     * parquet readers and [[Lsm]]-style data listings skip it as metadata. */
   private[graft] val payloadStatsFile = "_payload_stats.json"
@@ -246,6 +226,26 @@ object MediaIngest {
     }
   }
 
+  /** Read the admitted media corpus back (all batch directories),
+    * deriving the vectorized reader's row-batch size from the corpus's
+    * OWN payload stats — the r14 512×512 MediaSoak finding, enforced at
+    * the read site instead of documented in prose: the vectorized
+    * parquet reader sizes its column batches in ROWS
+    * (`spark.sql.parquet.columnarReaderBatchSize`, default 4096), so a
+    * corpus of ~1 MB binary payloads would ask each task for multi-GB
+    * contiguous buffers and OOM. Average row bytes come from the
+    * per-batch stats sidecars the daemon writes at commit time
+    * ([[corpusPayloadStats]] — logical payload bytes, one shallow
+    * listing, no data-file walk), falling back to on-disk sizes × a
+    * compression safety factor for legacy corpora; the conf is set to
+    * ~32 MB of payload per column batch, clamped to [16, 4096] (small
+    * payloads keep the stock batch size). Session-level conf by Spark's
+    * design — it is read at scan execution — so a mixed session reading
+    * this corpus and small-row tables pays at most smaller (never
+    * unsafe) batches on the latter. The daemon itself never re-reads
+    * stored payloads on the batch path (hashes are computed from the
+    * in-flight batch; the corpus is write-only there), so only
+    * rebuild/audit readers come through here. */
   def readCorpus(spark: SparkSession, corpusDir: String): DataFrame = {
     val (bytes0, rows, source) = corpusPayloadStats(spark, corpusDir)
     // The fallback's on-disk bytes understate in-memory row size on

@@ -2,6 +2,8 @@ package graft
 
 import graft.functions.Geo
 import graft.operators.Enrich
+import graft.sources.{SpotSource, SpotSynth}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
@@ -106,5 +108,75 @@ class GeoSpec extends SparkSpec {
     assert(got(1296.5015) == 23 && got(432.3005) == 70)
     assert(got(2.5) == 9999 && got(99.9999) == 9999)
     assert(got.values.count(_ != 9999) == 18)
+  }
+
+  /** Order-insensitive digest of a frame: row count, XOR and wrapping sum of
+    * each row's xxhash64 over every column as text. Doubles go through
+    * cast("string"), the shortest decimal that round-trips, so a change in
+    * any bit of any double changes the digest. */
+  private def digest(df: DataFrame): (Long, Long, Long) = {
+    val h = df.select(xxhash64(df.columns.toSeq.map(c => col(s"`$c`").cast("string")): _*))
+      .collect().map(_.getLong(0))
+    (h.length.toLong, h.foldLeft(0L)(_ ^ _), h.sum)
+  }
+
+  /** 15 API columns around each (tx, rx) pair; MHz cycles the band table. */
+  private def apiRows(pairs: Seq[(String, String)]) =
+    pairs.zipWithIndex.map { case ((tx, rx), i) =>
+      (i.toLong, 1700000000L + 120L * i, s"R$i", rx, -20 + i % 7,
+        SpotSynth.freqs(i % SpotSynth.freqs.length), s"C$i", tx, 23, i % 3 - 1,
+        1000 + i, i % 360, 7, "2.3.0", 1)
+    }
+
+  private def apiFrame(pairs: Seq[(String, String)]): DataFrame =
+    apiRows(pairs).toDF(graft.spots.SpotSchema.apiColumns: _*)
+
+  /** 400 locator pairs from a fixed java.util.Random seed, in the same
+    * three shapes as [[locGen]]. */
+  private val seededPairs: Seq[(String, String)] = {
+    val r = new scala.util.Random(20261020L)
+    def loc(): String = {
+      def c(from: Char, n: Int) = (from + r.nextInt(n)).toChar
+      val base = s"${c('A', 18)}${c('A', 18)}${c('0', 10)}${c('0', 10)}"
+      r.nextInt(3) match {
+        case 0 => base
+        case 1 => base + c('a', 24) + c('a', 24)
+        case _ => base + c('A', 24) + c('A', 24)
+      }
+    }
+    Seq.fill(400)((loc(), loc()))
+  }
+
+  /** A 16-column CSV (wd_time first, so enrich keeps it) over the seeded pairs. */
+  private def csv16Frame(): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("geo-csv16")
+    val lines = apiRows(seededPairs.take(60)).map { r =>
+      val t = java.time.Instant.ofEpochSecond(r._2).atZone(java.time.ZoneOffset.UTC)
+        .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd:HH:mm"))
+      (t +: r.productIterator.toSeq).mkString(",")
+    }
+    java.nio.file.Files.writeString(dir.resolve("spots.csv"), lines.mkString("\n"))
+    SpotSource.fromCsv16(spark, dir.resolve("spots.csv").toString)
+  }
+
+  /** Digests recorded from the enrichment built as one withColumn per
+    * output with the vertex as a struct; any restaging of the plan must
+    * reproduce every bit. */
+  private val pinned: Map[String, (Long, Long, Long)] = Map(
+    ("edge/enrich", (10L, -1771797963558509217L, 729953226490239059L)),
+    ("edge/formatted", (10L, -4737008349022477330L, 766399523148614234L)),
+    ("seeded/enrich", (400L, 7795472059467771029L, 3367490415160791813L)),
+    ("seeded/formatted", (400L, 4484856361143961522L, -8397442907322088828L)),
+    ("csv16/enrich", (60L, -7309526110883318567L, -4834902213793680871L)),
+    ("csv16/formatted", (60L, 340529092151945554L, -1329257285240572084L)))
+
+  test("enrich and formatted reproduce the pinned digests bit for bit") {
+    val inputs = Seq("edge" -> apiFrame(edgePairs), "seeded" -> apiFrame(seededPairs),
+      "csv16" -> csv16Frame())
+    val got = inputs.flatMap { case (name, df) =>
+      Seq(s"$name/enrich" -> digest(Enrich.enrich(df)),
+        s"$name/formatted" -> digest(Enrich.formatted(df)))
+    }
+    got.foreach { case (k, v) => assert(v == pinned(k), s"$k digest moved to $v") }
   }
 }

@@ -42,6 +42,18 @@ class PlanSpec extends SparkSpec {
       "geo math must stay inside a codegen stage")
   }
 
+  test("spot trigger: the enrichment computes each geodesic intermediate once") {
+    val drop = java.nio.file.Files.createTempDirectory("enrich-plan")
+    java.nio.file.Files.writeString(drop.resolve("drop.json"),
+      graft.tools.PlanDump.spotJson(20))
+    val df = graft.streaming.Ingest.processBatch(
+      graft.sources.SpotSource.fromJson(spark, drop.toString), 0L)
+    val nodes = graft.tools.PlanDump.expressionNodes(df.queryExecution.optimizedPlan)
+    // 8,353 while every use re-inlined its vertex, arc and longitude subtrees
+    assert(nodes <= 1500, s"$nodes expression nodes in the trigger's optimized plan")
+    assert(df.count() == 20)
+  }
+
   test("gap audit: intra window is bucket-partitioned, not global") {
     val ids = spark.read.parquet(s"$dir/events.parquet").select("event_id")
     val p = plan(Audit.gapDetails(ids, "event_id", 1024))
